@@ -110,6 +110,43 @@ def _sym_parts(edges: DataFrame):
     return mirror, selfw, kv
 
 
+def _best_moves(scored: DataFrame) -> DataFrame:
+    """``(vertex, new_c)`` for each vertex whose best candidate community
+    scores strictly above its current one. ``scored`` holds one row per
+    (vertex, candidate ``c``) with the vertex's current ``community`` and
+    the move score ``s``.
+
+    ONE unordered window pass extracts both the argmax candidate and the
+    current community's score — never self-join the scored frame, and
+    never SORT it: the argmax under (s desc, c asc) is exactly
+    min(struct(-s, c)) (s is decimal(38,0), negation exact; c is unique
+    per vertex, so the row whose c equals the winner's is the winner).
+    The old row_number() argmax forced a full sort of the edge-sized
+    candidate frame every round; both window aggregates here are
+    unordered and share one WindowExec over the same vertex partitioning
+    as the aggregation before it, so the round still has exactly one
+    exchange — and no per-round sort.
+
+    A NULL score (decimal overflow) is dropped first: as struct(NULL, c)
+    it would sort first under F.min and win the argmax."""
+    wv = Window.partitionBy("vertex")
+    return (
+        scored.filter(F.col("s").isNotNull())
+        .withColumn(
+            "cs",
+            F.max(F.when(F.col("c") == F.col("community"), F.col("s"))).over(
+                wv
+            ),
+        )
+        .withColumn(
+            "best",
+            F.min(F.struct((-F.col("s")).alias("ns"), F.col("c"))).over(wv),
+        )
+        .filter((F.col("c") == F.col("best.c")) & (F.col("s") > F.col("cs")))
+        .select("vertex", F.col("c").alias("new_c"))
+    )
+
+
 def louvain_move_phase(
     edges: DataFrame,
     init: DataFrame | None = None,
@@ -281,34 +318,7 @@ def louvain_move_phase(
                 ).alias("s"),
             )
         )
-        # ONE unordered window pass extracts both the argmax candidate and
-        # the current community's score — never self-join the scored
-        # frame, and never SORT it: the argmax under (s desc, c asc) is
-        # exactly min(struct(-s, c)) (s is decimal(38,0), negation exact;
-        # c is unique per vertex, so the row whose c equals the winner's
-        # is the winner). The old row_number() argmax forced a full sort
-        # of the edge-sized candidate frame every round; both window
-        # aggregates here are unordered and share one WindowExec over the
-        # same vertex partitioning as the aggregation above, so the round
-        # still has exactly one exchange — and no per-round sort.
-        moves = (
-            scored.withColumn(
-                "cs",
-                F.max(
-                    F.when(F.col("c") == F.col("community"), F.col("s"))
-                ).over(wv),
-            )
-            .withColumn(
-                "best",
-                F.min(F.struct((-F.col("s")).alias("ns"), F.col("c"))).over(
-                    wv
-                ),
-            )
-            .filter(
-                (F.col("c") == F.col("best.c")) & (F.col("s") > F.col("cs"))
-            )
-            .select("vertex", F.col("c").alias("new_c"))
-        )
+        moves = _best_moves(scored)
         new_state = (
             state.join(_b(moves), "vertex", "left")
             .select(

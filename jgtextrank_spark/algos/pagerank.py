@@ -9,15 +9,30 @@ networkx (>=3.0, scipy path) computes:
     x'  = alpha * (x @ A + sum(x[dangling]) * p) + (1 - alpha) * p
     stop when  sum(|x' - x|) < N * tol
 
-This module is that exact recurrence as one DataFrame job per superstep:
+Two solvers run that recurrence; ``pagerank_result`` picks one per call.
 
-* ``norm_edges`` (src, dst, w/outdeg(src)) is computed once, hash-partitioned
-  by ``src`` and cached — each superstep shuffles only the rank vector to the
-  adjacency partitions (ranks are O(V), edges O(E) stay put).
-* Dangling mass and the L1 convergence delta are **fused into a single
-  aggregate** over the new state, so each superstep is exactly one action.
-* State carries ``(vertex, rank, dangling)``; the superstep harness handles
-  persistence, lineage truncation, checkpoint/resume and metrics.
+* **Driver-local** (graphs of at most ``SMALL_GRAPH_LIMIT`` = 200 000
+  edges, the ``algos/smallgraph.py`` budget): one job fetches the edge
+  table as Arrow, ids are dictionary-encoded, and each superstep is an
+  ``np.bincount`` over ``dst`` on the driver — no Spark job inside the
+  loop. Per-document co-occurrence graphs and most host graphs land
+  here, which is how the reference scores them too (one in-process
+  ``nx.pagerank`` per graph). On a 4-core host one Spark job costs
+  0.1-0.3 s, so the job-per-superstep loop spends most of its time in
+  scheduling on such graphs.
+* **DataFrame loop** (larger graphs): one DataFrame job per superstep.
+  ``norm_edges`` (src, dst, w/outdeg(src)) is computed once,
+  hash-partitioned by ``src`` and cached — each superstep shuffles only
+  the rank vector to the adjacency partitions (ranks are O(V), edges
+  O(E) stay put). Dangling mass and the L1 convergence delta are fused
+  into a single aggregate over the new state, so each superstep is
+  exactly one action.
+
+Both return the same ``SuperstepResult`` (state ``vertex, dangling, rank,
+prev_rank`` plus ``pv`` when personalized) and write and resume the same
+checkpoints through ``supersteps.write_checkpoint`` /
+``read_checkpoint``, so a run checkpointed by one solver resumes on the
+other.
 
 For undirected graphs pass ``graph.symmetrize(edges)`` — matching how
 networkx treats an undirected graph (each edge in both directions,
@@ -26,10 +41,22 @@ self-loops once).
 
 from __future__ import annotations
 
+import time
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..supersteps import SuperstepResult, run_supersteps
+from ..supersteps import (
+    SuperstepResult,
+    read_checkpoint,
+    run_supersteps,
+    write_checkpoint,
+)
+from .smallgraph import SMALL_GRAPH_LIMIT
 
 __all__ = ["pagerank", "pagerank_result", "trustrank", "spam_mass"]
 
@@ -92,10 +119,13 @@ def pagerank_result(
 
     Sums are reassociated only (same addends per dst), so scores are
     bit-identical modulo float addition order — tests assert 1e-12
-    agreement with the unsalted path and 1e-6 vs the oracle."""
+    agreement with the unsalted path and 1e-6 vs the oracle.
+
+    Graphs of at most ``SMALL_GRAPH_LIMIT`` edges are solved on the
+    driver (see the module docstring); ``num_partitions``,
+    ``broadcast_threshold``, ``truncate_every`` and ``salt_buckets`` shape
+    only the DataFrame loop and are ignored there."""
     spark = edges.sparkSession
-    sc = spark.sparkContext
-    np_derived = num_partitions is None
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -114,6 +144,16 @@ def pagerank_result(
     )
     if vertices is not None:
         edge_ids = edge_ids.unionByName(vertices.select("id"))
+
+    vfield = edge_ids.schema["id"]
+    graph = _local_graph(ebase, vertices, vfield.dataType, weight_col)
+    if graph is not None:
+        ebase.unpersist()
+        return _pagerank_local(
+            spark, graph, vfield, alpha, max_iter, tol, personalization,
+            init_scores, checkpoint_every, checkpoint_dir, resume,
+        )
+
     verts = edge_ids.distinct()
 
     out_deg = ebase.groupBy("src").agg(F.sum(weight_col).alias("out_w"))
@@ -154,15 +194,6 @@ def pagerank_result(
         )
     verts = verts.persist()
     n = verts.count()
-    # scale-adaptive loop partitioning (guide §2): derive the cached
-    # adjacency's partition count from the graph size instead of the
-    # session constant — a 7-host or 31-token graph otherwise scans 32
-    # near-empty cached partitions in every one of its supersteps (3
-    # driver jobs x 32 tasks x tens of rounds of pure scheduling). Only
-    # clamps DOWN for small graphs (<=64k vertices); big graphs keep the
-    # configured width, and an explicit num_partitions wins either way.
-    if np_derived and n <= 65536:
-        num_partitions = min(num_partitions, max(1, n // 2048 + 1))
 
     # Rank vectors far smaller than the adjacency are broadcast into both
     # per-superstep joins: each superstep becomes map-only over the cached
@@ -333,6 +364,177 @@ def pagerank_result(
     verts.unpersist()
     norm_edges.unpersist()
     return result, n
+
+
+def _local_graph(
+    ebase: DataFrame, vertices: DataFrame | None, vtype, weight_col: str
+):
+    """Fetch the graph to the driver for the local solve: ``(ids, src,
+    dst, nw, dangling)`` with ``ids`` an Arrow array of the distinct
+    vertex ids, ``src``/``dst`` positions into it and ``nw`` the
+    out-degree-normalized weights. One job both measures and fetches the
+    edge table. None when the graph takes the DataFrame loop: more than
+    ``SMALL_GRAPH_LIMIT`` edges, a null id (the loop's joins drop those)
+    or a source whose out-weights sum to zero (the loop divides by it,
+    which raises under ANSI)."""
+    table = (
+        ebase.select(
+            F.col("src").cast(vtype).alias("src"),
+            F.col("dst").cast(vtype).alias("dst"),
+            F.col(weight_col).cast("double").alias("w"),
+        )
+        .limit(SMALL_GRAPH_LIMIT + 1)
+        .toArrow()
+    )
+    if table.num_rows > SMALL_GRAPH_LIMIT:
+        return None
+    cols = [table["src"], table["dst"]]
+    if vertices is not None:
+        cols.append(vertices.select(F.col("id").cast(vtype)).toArrow()[0])
+    all_ids = pa.concat_arrays([c.combine_chunks() for c in cols])
+    if all_ids.null_count:
+        return None
+    enc = all_ids.dictionary_encode()
+    codes = enc.indices.to_numpy()
+    m = table.num_rows
+    src, dst = codes[:m], codes[m : 2 * m]
+    n = len(enc.dictionary)
+    # F.sum skips null weights, so a null weight contributes nothing
+    w = table["w"].fill_null(0.0).to_numpy()
+    out_w = np.bincount(src, weights=w, minlength=n)
+    if (out_w[src] == 0).any():
+        return None
+    dangling = np.ones(n, dtype=bool)
+    dangling[src] = False
+    return enc.dictionary, src, dst, w / out_w[src], dangling
+
+
+def _positions(ids: pa.Array, table: pa.Table):
+    """Positions in ``ids`` of ``table``'s first column, and the mask of
+    rows whose id is in the graph."""
+    pos = pc.index_in(table.column(0), value_set=ids)
+    found = pos.is_valid().to_numpy(zero_copy_only=False)
+    return pos.fill_null(0).to_numpy(), found
+
+
+def _state_frame(spark, ids, vfield, dangling, rank, prev_rank, pv):
+    """The solver state as a DataFrame, with the DataFrame loop's column
+    order and nullability so both solvers write identical checkpoint
+    schemas."""
+    fields = [
+        T.StructField("vertex", vfield.dataType, vfield.nullable),
+        T.StructField("dangling", T.BooleanType(), False),
+        T.StructField("rank", T.DoubleType(), False),
+        T.StructField("prev_rank", T.DoubleType(), False),
+    ]
+    cols = [ids, dangling, rank, prev_rank]
+    if pv is not None:
+        fields.append(T.StructField("pv", T.DoubleType(), False))
+        cols.append(pv)
+    table = pa.table(cols, names=[f.name for f in fields])
+    return spark.createDataFrame(table, schema=T.StructType(fields))
+
+
+def _pagerank_local(
+    spark, graph, vfield, alpha, max_iter, tol, personalization,
+    init_scores, checkpoint_every, checkpoint_dir, resume,
+) -> tuple[SuperstepResult, int]:
+    """The DataFrame loop's recurrence, superstep for superstep, in numpy
+    on the driver. Same stopping rule (L1 delta <= N*tol), same metrics
+    rows, same checkpoint files."""
+    ids, src, dst, nw, dangling = graph
+    n = len(ids)
+    vtype = vfield.dataType
+
+    pv = None
+    if personalization is not None:
+        p = personalization.select(
+            F.col("id").cast(vtype), F.col("weight").cast("double")
+        ).toArrow()
+        pos, found = _positions(ids, p)
+        pw = p.column(1).fill_null(0.0).to_numpy()
+        pv = np.bincount(pos[found], weights=pw[found], minlength=n)
+        psum = pv.sum()
+        if not psum or psum <= 0:
+            raise ValueError(
+                "personalization weights (over ids present in the graph) "
+                "must sum > 0"
+            )
+        pv = pv / psum
+
+    if n == 0:
+        empty = np.empty(0)
+        state = _state_frame(
+            spark, ids, vfield, empty.astype(bool), empty, empty, pv
+        )
+        return SuperstepResult(state, 0, True, []), 0
+
+    # nx starts uniform, even personalized; a warm start seeds from prior
+    # scores (uniform 1/n for ids without one), renormalized to sum 1
+    x = np.full(n, 1.0 / n)
+    if init_scores is not None:
+        r = init_scores.select(
+            F.col("id").cast(vtype), F.col("rank").cast("double")
+        ).toArrow()
+        pos, found = _positions(ids, r)
+        found &= r.column(1).is_valid().to_numpy(zero_copy_only=False)
+        x[pos[found]] = r.column(1).fill_null(0.0).to_numpy()[found]
+        rsum = x.sum()
+        if not rsum or rsum <= 0:
+            raise ValueError("init_scores must have positive total mass")
+        x = x / rsum
+
+    metrics: list[dict] = []
+    start_iter = 0
+    found_ckpt = read_checkpoint(spark, checkpoint_dir) if resume else None
+    if found_ckpt is not None:
+        start_iter, ckpt, resume_row = found_ckpt
+        r = ckpt.select(F.col("vertex").cast(vtype), "rank").toArrow()
+        pos, found = _positions(ids, r)
+        if r.num_rows != n or not found.all():
+            raise ValueError(
+                f"checkpoint under {checkpoint_dir} holds a different "
+                "vertex set than this graph"
+            )
+        x = np.empty(n)
+        x[pos] = r.column(1).to_numpy()
+        metrics.append(resume_row)
+
+    prev = x
+    converged = False
+    it = start_iter
+    for it in range(start_iter + 1, max_iter + 1):
+        t0 = time.perf_counter()
+        prev = x
+        dangle = prev[dangling].sum()
+        if pv is None:
+            base = alpha * dangle / n + (1.0 - alpha) / n
+        else:
+            base = (alpha * dangle + (1.0 - alpha)) * pv
+        x = alpha * np.bincount(dst, weights=nw * prev[src], minlength=n)
+        x += base
+        delta = float(np.abs(x - prev).sum())
+        row = {
+            "iteration": it,
+            "wall_ms": (time.perf_counter() - t0) * 1000.0,
+            "delta": delta,
+            "event": "step",
+            "label": "pagerank",
+        }
+        if checkpoint_dir and checkpoint_every and it % checkpoint_every == 0:
+            write_checkpoint(
+                spark, checkpoint_dir, it,
+                _state_frame(spark, ids, vfield, dangling, x, prev, pv),
+                delta, "pagerank",
+            )
+            row["event"] = "checkpoint"
+        metrics.append(row)
+        if delta <= n * tol:
+            converged = True
+            break
+
+    state = _state_frame(spark, ids, vfield, dangling, x, prev, pv)
+    return SuperstepResult(state, it, converged, metrics), n
 
 
 def pagerank(

@@ -19,7 +19,7 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "ship_package"]
+__all__ = ["default_driver_memory", "get_spark", "ship_package"]
 
 
 def ship_package(spark: SparkSession) -> str:
@@ -46,6 +46,16 @@ def ship_package(spark: SparkSession) -> str:
                 zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
     return zip_path
+
+
+def default_driver_memory() -> str:
+    """``min(32g, half of physical RAM)``. 32g is right for a 128 GiB box,
+    but the JVM grows its heap toward the cap before collecting hard: on
+    a 16 GiB machine a 32g cap let the test suite's JVM pass 10 GiB of
+    resident memory within three minutes, leaving the machine to kill
+    it. Half of RAM leaves room for the Python workers."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 * 1024, total // 2**21)}m"
 
 
 def get_spark(
@@ -81,12 +91,13 @@ def get_spark(
         # local mode: the driver JVM IS the executor, so its heap must be
         # sized for executor-style work (cached adjacencies + shuffle +
         # broadcast churn across hundreds of supersteps). 8g forced tight
-        # GC cycles on the 30M-edge bench graphs; 32g is right for a
-        # 128 GiB box and is still overridable per deployment
+        # GC cycles on the 30M-edge bench graphs; see default_driver_memory
+        # for the cap on smaller machines. Overridable per deployment
         # (SPARK_DRIVER_MEM). On a real cluster the driver does no data
         # work and can stay small — size executors instead.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -35,7 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import fsutil
 
-__all__ = ["SuperstepResult", "run_supersteps"]
+__all__ = [
+    "SuperstepResult",
+    "read_checkpoint",
+    "run_supersteps",
+    "write_checkpoint",
+]
 
 
 @dataclass
@@ -70,6 +75,55 @@ def _find_resume_point(spark: SparkSession, checkpoint_dir: str):
     return best
 
 
+def write_checkpoint(
+    spark: SparkSession,
+    checkpoint_dir: str,
+    iteration: int,
+    state: DataFrame,
+    delta: float | None,
+    label: str,
+) -> str:
+    """Write ``state`` as superstep ``iteration``'s checkpoint: the state
+    parquet plus ``_superstep_meta.json``. Returns the state path. Every
+    solver that checkpoints writes through here, so a checkpoint written
+    by one solver loop can be resumed by another."""
+    path = _checkpoint_path(checkpoint_dir, iteration)
+    state_path = os.path.join(path, "state")
+    state.write.mode("overwrite").parquet(state_path)
+    meta = {
+        "iteration": iteration,
+        "delta": None if delta is None else float(delta),
+        "label": label,
+        # partition lineage: what the state was partitioned as, so resume
+        # can restore co-location cheaply.
+        "partitions": state.rdd.getNumPartitions(),
+        "schema": state.schema.jsonValue(),
+    }
+    fsutil.write_text(
+        spark, os.path.join(path, "_superstep_meta.json"), json.dumps(meta)
+    )
+    return state_path
+
+
+def read_checkpoint(spark: SparkSession, checkpoint_dir: str | None):
+    """The newest checkpoint under ``checkpoint_dir`` as ``(iteration,
+    state, metrics row)``, or None. The row is the ``"resume"`` event a
+    resumed loop reports first."""
+    found = _find_resume_point(spark, checkpoint_dir)
+    if found is None:
+        return None
+    iteration, path, meta = found
+    state = spark.read.parquet(os.path.join(path, "state"))
+    row = {
+        "iteration": iteration,
+        "wall_ms": 0.0,
+        "delta": meta.get("delta"),
+        "event": "resume",
+        "partitions": state.rdd.getNumPartitions(),
+    }
+    return iteration, state, row
+
+
 def run_supersteps(
     spark: SparkSession,
     initial_state: DataFrame,
@@ -92,20 +146,10 @@ def run_supersteps(
     start_iter = 0
     state = initial_state
 
-    if checkpoint_dir and resume:
-        found = _find_resume_point(spark, checkpoint_dir)
-        if found is not None:
-            start_iter, path, meta = found
-            state = spark.read.parquet(os.path.join(path, "state"))
-            metrics.append(
-                {
-                    "iteration": start_iter,
-                    "wall_ms": 0.0,
-                    "delta": meta.get("delta"),
-                    "event": "resume",
-                    "partitions": state.rdd.getNumPartitions(),
-                }
-            )
+    found = read_checkpoint(spark, checkpoint_dir) if resume else None
+    if found is not None:
+        start_iter, state, resume_row = found
+        metrics.append(resume_row)
 
     state = state.persist()
     converged = False
@@ -141,28 +185,12 @@ def run_supersteps(
         do_checkpoint = checkpoint_every and it % checkpoint_every == 0
         if do_checkpoint:
             if checkpoint_dir:
-                path = _checkpoint_path(checkpoint_dir, it)
-                state.write.mode("overwrite").parquet(
-                    os.path.join(path, "state")
-                )
-                meta = {
-                    "iteration": it,
-                    "delta": None if delta is None else float(delta),
-                    "label": label,
-                    # partition lineage: what the state was partitioned as,
-                    # so resume can restore co-location cheaply.
-                    "partitions": state.rdd.getNumPartitions(),
-                    "schema": state.schema.jsonValue(),
-                }
-                fsutil.write_text(
-                    spark,
-                    os.path.join(path, "_superstep_meta.json"),
-                    json.dumps(meta),
+                state_path = write_checkpoint(
+                    spark, checkpoint_dir, it, state, delta, label
                 )
                 # reload from the durable checkpoint (also truncates lineage
                 # to a plain parquet scan)
-                state = spark.read.parquet(os.path.join(path, "state"))
-                state = state.persist()
+                state = spark.read.parquet(state_path).persist()
                 row["event"] = "checkpoint"
         metrics.append(row)
 

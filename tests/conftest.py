@@ -109,6 +109,44 @@ def spark():
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     yield spark
+    _stop_spark(spark)
+
+
+def _stop_spark(spark):
+    """Stop the session and the gateway JVM behind it, and wait for the
+    JVM to exit, so no process outlives the test run."""
+    import subprocess
+
+    from pyspark import SparkContext
+
+    spark.stop()
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if gateway is not None:
+        gateway.shutdown()
+    if proc is not None:
+        if proc.stdin:
+            proc.stdin.close()  # the gateway JVM exits when its stdin closes
+        try:
+            proc.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait(timeout=30)
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+
+
+@pytest.fixture(params=["local", "dataframe"])
+def pagerank_path(request, monkeypatch):
+    """Run a PageRank test on both solvers. Every test graph is small
+    enough for the driver-local solve, so ``dataframe`` lowers the
+    local-solve edge limit to 0 for the test, forcing the DataFrame loop."""
+    if request.param == "dataframe":
+        import importlib
+
+        mod = importlib.import_module("jgtextrank_spark.algos.pagerank")
+        monkeypatch.setattr(mod, "SMALL_GRAPH_LIMIT", 0)
+    return request.param
 
 
 @pytest.fixture(scope="session")

@@ -1938,6 +1938,27 @@ def test_louvain_exact_python_mirror(spark):
     assert got == _louvain_mirror(edges, 5)
 
 
+def test_louvain_null_score_never_wins_argmax(spark):
+    """A NULL move score (decimal overflow) is not comparable: it must
+    neither win the argmax nor block a real best move."""
+    from decimal import Decimal
+
+    from jgtextrank_spark.algos.louvain import _best_moves
+
+    def d(x):
+        return None if x is None else Decimal(x)
+
+    scored = spark.createDataFrame(
+        [
+            ("v", "a", "a", d(5)), ("v", "a", "b", None), ("v", "a", "c", d(7)),
+            ("u", "x", "x", d(3)), ("u", "x", "y", None),
+        ],
+        "vertex string, community string, c string, s decimal(38,0)",
+    )
+    got = {r["vertex"]: r["new_c"] for r in _best_moves(scored).collect()}
+    assert got == {"v": "c"}
+
+
 def test_louvain_ring_of_cliques(spark):
     import itertools
 

@@ -34,14 +34,14 @@ def _collect(df):
     return {r["vertex"]: r["score"] for r in df.collect()}
 
 
-def test_simple_chain(spark):
+def test_simple_chain(spark, pagerank_path):
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (1, 3, 2.0)]
     got = _collect(pagerank(_make_edges_df(spark, edges)))
     want = pagerank_edges([(str(s), str(d), w) for s, d, w in edges])
     _assert_allclose(got, want)
 
 
-def test_dangling_and_isolated(spark):
+def test_dangling_and_isolated(spark, pagerank_path):
     # 4 is dangling (no out-edges), 9 is fully isolated.
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0), (1, 4, 0.5)]
     edf = _make_edges_df(spark, edges)
@@ -53,7 +53,7 @@ def test_dangling_and_isolated(spark):
     _assert_allclose(got, want)
 
 
-def test_undirected_with_selfloop(spark):
+def test_undirected_with_selfloop(spark, pagerank_path):
     edges = [(1, 2, 1.0), (2, 3, 1.0), (2, 2, 1.0), (3, 1, 1.0)]
     edf = _make_edges_df(spark, edges, directed=False)
     got = _collect(pagerank(edf))
@@ -63,7 +63,7 @@ def test_undirected_with_selfloop(spark):
     _assert_allclose(got, want)
 
 
-def test_random_graph_weighted(spark):
+def test_random_graph_weighted(spark, pagerank_path):
     rng = random.Random(42)
     n = 60
     edges = [
@@ -80,7 +80,7 @@ def test_random_graph_weighted(spark):
     _assert_allclose(got, want)
 
 
-def test_convergence_metadata(spark):
+def test_convergence_metadata(spark, pagerank_path):
     edges = [(1, 2, 1.0), (2, 1, 1.0)]
     res, n = pagerank_result(_make_edges_df(spark, edges))
     assert n == 2
@@ -91,7 +91,7 @@ def test_convergence_metadata(spark):
     assert steps[-1]["delta"] <= 2 * 1e-6
 
 
-def test_checkpoint_resume(spark, tmp_path):
+def test_checkpoint_resume(spark, tmp_path, pagerank_path):
     rng = random.Random(7)
     n = 40
     dedup = {}
@@ -121,7 +121,7 @@ def test_checkpoint_resume(spark, tmp_path):
         assert abs(got[k] - v) <= 1e-6
 
 
-def test_personalized_pagerank_parity(spark):
+def test_personalized_pagerank_parity(spark, pagerank_path):
     """Topic-sensitive PageRank vs the nx recurrence: teleport AND
     dangling mass follow the normalized personalization vector; vertices
     absent from the table get weight 0. Encoded path identical."""
@@ -176,7 +176,7 @@ def test_personalized_pagerank_parity(spark):
         pagerank(edf, personalization=allout)
 
 
-def test_warm_start_same_fixpoint_fewer_supersteps(spark):
+def test_warm_start_same_fixpoint_fewer_supersteps(spark, pagerank_path):
     """init_scores warm start: identical converged scores (1e-6), fewer
     supersteps when seeding from a near-identical graph's solution —
     the incremental-recompute path for crawl deltas."""
@@ -209,7 +209,7 @@ def test_warm_start_same_fixpoint_fewer_supersteps(spark):
         assert abs(c[v] - w[v]) < 5e-6, v
 
 
-def test_warm_start_new_vertices_get_uniform_prior(spark):
+def test_warm_start_new_vertices_get_uniform_prior(spark, pagerank_path):
     # prior covers only part of the graph + one out-of-graph id; the run
     # must still converge to the cold-start fixpoint
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (3, 4, 1.0)]
@@ -224,7 +224,7 @@ def test_warm_start_new_vertices_get_uniform_prior(spark):
         assert abs(c[v] - w[v]) < 5e-6, v
 
 
-def test_warm_start_encoded_matches_plain(spark):
+def test_warm_start_encoded_matches_plain(spark, pagerank_path):
     edges = [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (1, 3, 0.5)]
     prior = spark.createDataFrame([("2", 0.7), ("3", 0.3)], ["id", "rank"])
     plain = {
@@ -244,7 +244,7 @@ def test_warm_start_encoded_matches_plain(spark):
         assert abs(plain[v] - enc[v]) < 1e-9, v
 
 
-def test_warm_start_zero_mass_raises(spark):
+def test_warm_start_zero_mass_raises(spark, pagerank_path):
     edges = [(1, 2, 1.0), (2, 1, 1.0)]
     bad = spark.createDataFrame([("1", -1.0), ("2", 0.0)], ["id", "rank"])
     with pytest.raises(Exception):
@@ -320,3 +320,132 @@ def test_pagerank_multi_seed_vs_nx(spark):
     assert {(r["seed"], r["vertex"]) for r in sparse} == {
         k for k, v in got.items() if v > 0.0
     }
+
+
+# ------------------------------------------------- local solve vs DataFrame loop
+def _both_paths(monkeypatch, fn):
+    """``fn()`` on the driver-local solve, then on the DataFrame loop."""
+    import importlib
+
+    mod = importlib.import_module("jgtextrank_spark.algos.pagerank")
+    local = fn()
+    with monkeypatch.context() as m:
+        m.setattr(mod, "SMALL_GRAPH_LIMIT", 0)
+        loop = fn()
+    return local, loop
+
+
+def _ranks(res):
+    return {r["vertex"]: r["rank"] for r in res.state.collect()}
+
+
+def _random_edges(seed, n, m):
+    rng = random.Random(seed)
+    dedup = {}
+    for _ in range(m):
+        dedup[(rng.randrange(n), rng.randrange(n))] = rng.uniform(0.5, 2.0)
+    return [(s, d, w) for (s, d), w in dedup.items()]
+
+
+@pytest.mark.parametrize("id_type", ["string", "long"])
+def test_local_solve_matches_dataframe_loop(spark, monkeypatch, id_type):
+    """Same scores to 1e-12, same state schema and same superstep count,
+    with isolated vertices, a personalization vector and a warm start."""
+    conv = str if id_type == "string" else int
+    edges = _random_edges(3, 50, 300)
+    edf = spark.createDataFrame(
+        [(conv(s), conv(d), w) for s, d, w in edges],
+        f"src {id_type}, dst {id_type}, weight double",
+    )
+    vdf = spark.createDataFrame(
+        [(conv(v),) for v in (900, 901, 3)], f"id {id_type}"
+    )
+    pdf = spark.createDataFrame(
+        [(conv(v), float(1 + v % 3)) for v in range(0, 50, 4)] + [
+            (conv(901), 2.0), (conv(5555), 9.0)
+        ],
+        f"id {id_type}, weight double",
+    )
+    prior = spark.createDataFrame(
+        [(conv(v), 0.01 * (1 + v % 7)) for v in range(0, 50, 3)],
+        f"id {id_type}, rank double",
+    )
+    for kwargs in ({}, {"personalization": pdf, "init_scores": prior}):
+        local, loop = _both_paths(
+            monkeypatch,
+            lambda: pagerank_result(edf, vertices=vdf, **kwargs)[0],
+        )
+        assert local.state.schema == loop.state.schema
+        assert (local.iterations, local.converged) == (
+            loop.iterations, loop.converged
+        )
+        a, b = _ranks(local), _ranks(loop)
+        assert a.keys() == b.keys()
+        assert conv(901) in a
+        for v in a:
+            assert abs(a[v] - b[v]) <= 1e-12, (kwargs.keys(), v)
+
+
+@pytest.mark.parametrize("first", ["local", "dataframe"])
+def test_checkpoint_resumes_across_paths(spark, monkeypatch, tmp_path, first):
+    """A checkpoint written by one solver resumes on the other and ends at
+    the uninterrupted fixpoint."""
+    import importlib
+
+    mod = importlib.import_module("jgtextrank_spark.algos.pagerank")
+    edges = _random_edges(7, 40, 250)
+    edf = _make_edges_df(spark, edges)
+    ckpt = str(tmp_path / "pr_ckpt")
+    limit = mod.SMALL_GRAPH_LIMIT
+    legs = (0, limit) if first == "dataframe" else (limit, 0)
+    monkeypatch.setattr(mod, "SMALL_GRAPH_LIMIT", legs[0])
+    res1, _ = pagerank_result(
+        edf, max_iter=5, checkpoint_every=2, checkpoint_dir=ckpt
+    )
+    assert not res1.converged
+    assert [m["event"] for m in res1.metrics].count("checkpoint") == 2
+    monkeypatch.setattr(mod, "SMALL_GRAPH_LIMIT", legs[1])
+    res2, _ = pagerank_result(
+        edf, max_iter=100, checkpoint_every=2, checkpoint_dir=ckpt
+    )
+    assert res2.converged
+    assert res2.metrics[0]["event"] == "resume"
+    assert res2.metrics[0]["iteration"] == 4
+    assert res2.metrics[1]["iteration"] == 5
+    want = pagerank_edges([(str(s), str(d), w) for s, d, w in edges])
+    _assert_allclose(_ranks(res2), want)
+
+
+def test_zero_weight_out_edges(spark, pagerank_path):
+    """A zero-weight edge carries no rank; a source whose out-weights sum
+    to zero is divided by, which raises under ANSI on both paths."""
+    edges = [(1, 2, 1.0), (2, 3, 1.0), (2, 1, 0.0), (3, 1, 1.0), (3, 2, 2.0)]
+    got = _collect(pagerank(_make_edges_df(spark, edges)))
+    want = pagerank_edges([(str(s), str(d), w) for s, d, w in edges])
+    _assert_allclose(got, want)
+
+    all_zero = _make_edges_df(spark, [(1, 2, 1.0), (2, 3, 0.0), (3, 1, 1.0)])
+    if spark.conf.get("spark.sql.ansi.enabled") == "true":
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            pagerank(all_zero).collect()
+
+
+def test_local_solve_job_count_independent_of_supersteps(spark):
+    """The driver-local solve runs no Spark job inside its loop: 5 and 50
+    supersteps (``tol=0``) submit the same number of jobs."""
+    # a ring with one chord mixes slowly: 50 supersteps stay unconverged
+    ring = [(i, (i + 1) % 40, 1.0) for i in range(40)] + [(0, 20, 1.0)]
+    edf = _make_edges_df(spark, ring)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    for iters in (5, 50):
+        group = f"pagerank-local-{iters}"
+        sc.setJobGroup(group, group)
+        try:
+            res, _ = pagerank_result(edf, max_iter=iters, tol=0.0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.iterations == iters and not res.converged
+        jobs[iters] = len(tracker.getJobIdsForGroup(group))
+    assert jobs[5] == jobs[50] <= 3

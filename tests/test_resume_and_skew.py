@@ -65,7 +65,7 @@ def test_pointer_jumping_speeds_up_chain(spark):
     assert set(got.values()) == {"0"}
 
 
-def test_pagerank_on_skewed_hub_graph(spark):
+def test_pagerank_on_skewed_hub_graph(spark, pagerank_path):
     """Power-law-style hub: one vertex receives 80% of edges — the skew
     case 100TB co-occurrence graphs hit. Scores must still match the
     oracle exactly."""
@@ -86,7 +86,7 @@ def test_pagerank_on_skewed_hub_graph(spark):
         assert abs(got[k] - v) <= 1e-6
 
 
-def test_pagerank_salted_two_stage_matches(spark):
+def test_pagerank_salted_two_stage_matches(spark, pagerank_path):
     """salt_buckets only reassociates the per-dst contribution sums; the
     salted two-stage tree must match the unsalted path ~exactly and the
     oracle to 1e-6 on the 80%-hub graph."""
@@ -114,7 +114,7 @@ def test_pagerank_salted_two_stage_matches(spark):
         assert abs(salted[k] - v) <= 1e-6
 
 
-def test_pagerank_encoded_ids_matches(spark):
+def test_pagerank_encoded_ids_matches(spark, pagerank_path):
     edges = [(i, (i * 7) % 23, 1.0 + (i % 2)) for i in range(40)]
     dedup = {(s, d): w for s, d, w in edges if s != d}
     edges = [(s, d, w) for (s, d), w in dedup.items()]
