@@ -2,30 +2,44 @@
 
 Generalizes the reference's per-component decomposition
 (``/root/reference/jgtextrank/core.py:614-642``, which iterates
-``nx.connected_components``) into a distributed fixpoint:
+``nx.connected_components``) into a fixpoint:
 
     label(v) <- min(label(v), min_{u ~ v} label(u))
 
-until no label changes. Each superstep is one join + one aggregation; the
-adjacency is symmetrized once, hash-partitioned by ``src`` and cached, so
-only the (small) label vector shuffles per superstep. Convergence in
-O(diameter) supersteps — for power-law web graphs the effective diameter
-is small (~log N), which is the regime this implementation targets; a
-two-phase large-star/small-star contraction (Kiveris et al., "Connected
-Components in MapReduce and Beyond") converging in O(log^2 N) on
-adversarial long-chain graphs is the known upgrade path and slots into
-the same superstep harness.
+until no label changes, with tree hooking and pointer jumping on top
+(see ``connected_components_result``). Two solvers run that recurrence,
+round for round; ``connected_components_result`` picks one per call.
 
+* **Driver-local** (graphs of at most ``SMALL_GRAPH_LIMIT`` = 200 000
+  edges, ``algos/smallgraph.py``): one Arrow job fetches the edge table,
+  ids become int64 codes in Spark's sort order, and each round is a few
+  ``np.minimum.at`` scatters on the driver — no Spark job inside the
+  loop, the way the reference runs one in-process networkx call per
+  graph.
+* **DataFrame loop** (larger graphs, or a null id): each superstep is one
+  join + one aggregation; the adjacency is symmetrized once,
+  hash-partitioned by ``src`` and cached, so only the (small) label
+  vector shuffles per superstep. Convergence in O(diameter) supersteps
+  without the acceleration — for power-law web graphs the effective
+  diameter is small (~log N). The alternating large-star/small-star
+  contraction (Kiveris et al., "Connected Components in MapReduce and
+  Beyond") below converges in O(log^2 N) on adversarial long-chain
+  graphs.
+
+Both return the same ``SuperstepResult`` and write and resume the same
+checkpoints, so a run checkpointed by one solver resumes on the other.
 Component ids are the minimum vertex id in the component (deterministic).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import materialize_input, symmetrize
 from ..supersteps import SuperstepResult, run_supersteps
+from .smallgraph import label_loop, local_graph
 
 __all__ = [
     "connected_components",
@@ -73,7 +87,11 @@ def connected_components_result(
     chains, and hooking is what keeps star-to-star MERGES logarithmic —
     without it, a bridge landing mid-chain between two formed stars
     crawls to the representative at one hop per round (measured: 60+
-    rounds vs 11 on two bridged 1k-chains)."""
+    rounds vs 11 on two bridged 1k-chains).
+
+    Graphs of at most ``SMALL_GRAPH_LIMIT`` edges are solved on the
+    driver (see the module docstring); ``num_partitions`` and
+    ``broadcast_threshold`` shape only the DataFrame loop."""
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -87,6 +105,13 @@ def connected_components_result(
     # 3.0s first round on the dedup graph). Unpersisted as soon as the
     # loop's own cached frames (adj, init) are filled.
     ebase = materialize_input(edges, "src", "dst")
+    graph = local_graph(ebase, vertices)
+    if graph is not None:
+        ebase.unpersist()
+        return _components_local(
+            spark, graph, init_labels, max_iter, checkpoint_every,
+            checkpoint_dir, resume, accelerated,
+        )
     verts = ebase.select(F.col("src").alias("vertex")).unionByName(
         ebase.select(F.col("dst").alias("vertex"))
     )
@@ -263,6 +288,51 @@ def connected_components_result(
     )
     adj.unpersist()
     return result
+
+
+def _components_local(
+    spark, graph, init_labels, max_iter, checkpoint_every, checkpoint_dir,
+    resume, accelerated,
+) -> SuperstepResult:
+    """The DataFrame loop's rounds in numpy: the same neighbour-min, hook
+    and jump on the same (code-ordered) labels, so every round's labels
+    and the round count match it."""
+    src, dst = graph.src, graph.dst
+    labels = np.arange(graph.n, dtype=np.int64)
+    if init_labels is not None:
+        # prior labels naming an in-graph vertex seed the state and join
+        # the adjacency as virtual (vertex, representative) star edges
+        prior = init_labels.select(
+            F.col("id").cast(graph.vfield.dataType),
+            F.col("label").cast(graph.vfield.dataType),
+        ).toArrow()
+        owner, has_owner = graph.positions(prior, 0)
+        target, has_target = graph.positions(prior, 1)
+        keep = has_owner & has_target
+        np.minimum.at(labels, owner[keep], target[keep])
+        src = np.concatenate([src, owner[keep]])
+        dst = np.concatenate([dst, target[keep]])
+    # symmetrized, self-loops dropped; duplicates are harmless to a min
+    loop = src != dst
+    a = np.concatenate([src[loop], dst[loop]])
+    b = np.concatenate([dst[loop], src[loop]])
+
+    def step(label):
+        l1 = label.copy()
+        np.minimum.at(l1, b, label[a])  # neighbour-min
+        if not accelerated:
+            return l1
+        # hook: each round-start representative absorbs the min of the
+        # vertices pointing at it; then jump: label <- label(label)
+        m = l1.copy()
+        np.minimum.at(m, label, l1)
+        return np.minimum(m, label[m])
+
+    return label_loop(
+        spark, graph, labels, step, max_iter, checkpoint_every,
+        checkpoint_dir, resume, "connected_components",
+        label_nullable=accelerated or graph.vfield.nullable,
+    )
 
 
 def _large_star(E: DataFrame) -> DataFrame:

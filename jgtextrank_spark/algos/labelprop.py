@@ -6,20 +6,37 @@ neighbours (weighted by edge weight), ties broken by the smallest label —
 fully deterministic, unlike classic randomized LPA. Vertices with no
 neighbours keep their own label.
 
-Each superstep: join labels to the cached symmetrized adjacency, count
-(vertex, label) weights, pick the argmax per vertex with a window — two
-shuffles over O(E) rows, adjacency itself never re-shuffles. Converges when
-no label changes or ``max_iter`` (LPA can oscillate on bipartite-ish
-structures; max_iter bounds that, as is standard).
+Two solvers run the same rounds; ``label_propagation_result`` picks one
+per call.
+
+* **Driver-local** (graphs of at most ``SMALL_GRAPH_LIMIT`` = 200 000
+  edges, ``algos/smallgraph.py``): one Arrow job fetches the edge table,
+  ids become int64 codes in Spark's sort order, and each round sums the
+  votes per (vertex, label) with ``np.bincount`` in edge order and takes
+  the argmax on the driver — no Spark job inside the loop.
+* **DataFrame loop** (larger graphs, a null id or, when weighted, a
+  null or NaN weight): each superstep joins labels to the cached
+  symmetrized adjacency, counts (vertex, label) weights and picks the
+  argmax per vertex with a window — two shuffles over O(E) rows, the
+  adjacency itself never re-shuffles.
+
+Both return the same ``SuperstepResult`` and write and resume the same
+checkpoints. Converges when no label changes or ``max_iter`` (LPA can
+oscillate on bipartite-ish structures; max_iter bounds that, as is
+standard).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import symmetrize
 from ..supersteps import SuperstepResult, run_supersteps
+from .smallgraph import label_loop, local_graph
 
 __all__ = ["label_propagation", "label_propagation_result"]
 
@@ -35,7 +52,17 @@ def label_propagation_result(
     resume: bool = True,
     broadcast_threshold: int = 2_000_000,
 ) -> SuperstepResult:
+    """Synchronous label propagation; state ``(vertex, label,
+    prev_label)``. ``weighted=False`` counts every edge as one vote.
+    Graphs of at most ``SMALL_GRAPH_LIMIT`` edges are solved on the
+    driver (see the module docstring); ``num_partitions`` and
+    ``broadcast_threshold`` shape only the DataFrame loop."""
     spark = edges.sparkSession
+    graph = local_graph(edges, vertices, "weight" if weighted else None)
+    if graph is not None and not (weighted and _odd_weights(graph.weight)):
+        return _label_propagation_local(
+            spark, graph, max_iter, checkpoint_every, checkpoint_dir, resume
+        )
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -103,6 +130,56 @@ def label_propagation_result(
     )
     adj.unpersist()
     return result
+
+
+def _odd_weights(w: pa.Array) -> bool:
+    """A null or NaN weight. SQL's sum skips nulls and its ordering ranks
+    NaN above every number; the local vote count mirrors neither, so
+    such graphs take the DataFrame loop."""
+    return bool(w.null_count) or bool(pc.any(pc.is_nan(w)).as_py())
+
+
+def _label_propagation_local(
+    spark, graph, max_iter, checkpoint_every, checkpoint_dir, resume
+) -> SuperstepResult:
+    """The DataFrame loop's rounds in numpy. Votes are summed per
+    (vertex, label) in edge order, each edge voting both ways; the
+    heaviest label wins, ties to the smallest label (the smallest code),
+    and a vertex without votes keeps its label."""
+    n = graph.n
+    w = (
+        np.ones(len(graph.src))
+        if graph.weight is None
+        else graph.weight.to_numpy(zero_copy_only=False)
+    )
+    loop = graph.src != graph.dst
+    # interleave the two directions so each vertex's votes arrive in edge
+    # order: row 2i is edge i forward, row 2i+1 backward
+    a = np.stack([graph.src[loop], graph.dst[loop]], axis=1).ravel()
+    b = np.stack([graph.dst[loop], graph.src[loop]], axis=1).ravel()
+    wv = np.repeat(w[loop], 2)
+
+    def step(label):
+        keys, inv = np.unique(b * n + label[a], return_inverse=True)
+        votes = np.bincount(inv, weights=wv)
+        v, lab = keys // n, keys % n
+        top = np.full(n, -np.inf)
+        np.maximum.at(top, v, votes)
+        best = votes == top[v]
+        v, lab = v[best], lab[best]
+        # keys are sorted by (vertex, label): each vertex's first winner
+        # is its smallest heaviest label
+        first = np.ones(len(v), dtype=bool)
+        first[1:] = v[1:] != v[:-1]
+        new = label.copy()
+        new[v[first]] = lab[first]
+        return new
+
+    return label_loop(
+        spark, graph, np.arange(n, dtype=np.int64), step, max_iter,
+        checkpoint_every, checkpoint_dir, resume, "label_propagation",
+        label_nullable=graph.vfield.nullable,
+    )
 
 
 def label_propagation(

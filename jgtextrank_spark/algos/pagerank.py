@@ -12,10 +12,10 @@ networkx (>=3.0, scipy path) computes:
 Two solvers run that recurrence; ``pagerank_result`` picks one per call.
 
 * **Driver-local** (graphs of at most ``SMALL_GRAPH_LIMIT`` = 200 000
-  edges, the ``algos/smallgraph.py`` budget): one job fetches the edge
-  table as Arrow, ids are dictionary-encoded, and each superstep is an
-  ``np.bincount`` over ``dst`` on the driver — no Spark job inside the
-  loop. Per-document co-occurrence graphs and most host graphs land
+  edges): ``smallgraph.local_graph`` fetches the edge table in one Arrow
+  job (the fetch components, label propagation and triangle counting
+  share) and each superstep is an ``np.bincount`` over ``dst`` on the
+  driver — no Spark job inside the loop. Per-document co-occurrence graphs and most host graphs land
   here, which is how the reference scores them too (one in-process
   ``nx.pagerank`` per graph). On a 4-core host one Spark job costs
   0.1-0.3 s, so the job-per-superstep loop spends most of its time in
@@ -45,7 +45,6 @@ import time
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,7 +55,7 @@ from ..supersteps import (
     run_supersteps,
     write_checkpoint,
 )
-from .smallgraph import SMALL_GRAPH_LIMIT
+from .smallgraph import local_graph
 
 __all__ = ["pagerank", "pagerank_result", "trustrank", "spam_mass"]
 
@@ -139,21 +138,19 @@ def pagerank_result(
 
     ebase = materialize_input(edges, "src", "dst", weight_col)
 
+    graph = _local_graph(ebase, vertices, weight_col)
+    if graph is not None:
+        ebase.unpersist()
+        return _pagerank_local(
+            spark, *graph, alpha, max_iter, tol, personalization,
+            init_scores, checkpoint_every, checkpoint_dir, resume,
+        )
+
     edge_ids = ebase.select(F.col("src").alias("id")).unionByName(
         ebase.select(F.col("dst").alias("id"))
     )
     if vertices is not None:
         edge_ids = edge_ids.unionByName(vertices.select("id"))
-
-    vfield = edge_ids.schema["id"]
-    graph = _local_graph(ebase, vertices, vfield.dataType, weight_col)
-    if graph is not None:
-        ebase.unpersist()
-        return _pagerank_local(
-            spark, graph, vfield, alpha, max_iter, tol, personalization,
-            init_scores, checkpoint_every, checkpoint_dir, resume,
-        )
-
     verts = edge_ids.distinct()
 
     out_deg = ebase.groupBy("src").agg(F.sum(weight_col).alias("out_w"))
@@ -367,54 +364,25 @@ def pagerank_result(
 
 
 def _local_graph(
-    ebase: DataFrame, vertices: DataFrame | None, vtype, weight_col: str
+    ebase: DataFrame, vertices: DataFrame | None, weight_col: str
 ):
-    """Fetch the graph to the driver for the local solve: ``(ids, src,
-    dst, nw, dangling)`` with ``ids`` an Arrow array of the distinct
-    vertex ids, ``src``/``dst`` positions into it and ``nw`` the
-    out-degree-normalized weights. One job both measures and fetches the
-    edge table. None when the graph takes the DataFrame loop: more than
-    ``SMALL_GRAPH_LIMIT`` edges, a null id (the loop's joins drop those)
-    or a source whose out-weights sum to zero (the loop divides by it,
-    which raises under ANSI)."""
-    table = (
-        ebase.select(
-            F.col("src").cast(vtype).alias("src"),
-            F.col("dst").cast(vtype).alias("dst"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-        .limit(SMALL_GRAPH_LIMIT + 1)
-        .toArrow()
-    )
-    if table.num_rows > SMALL_GRAPH_LIMIT:
+    """The graph for the local solve: ``(graph, nw, dangling)`` with
+    ``nw`` the out-degree-normalized edge weights. None when the graph
+    takes the DataFrame loop: ``local_graph`` declines it, or a source's
+    out-weights sum to zero (the loop divides by it, which raises under
+    ANSI)."""
+    graph = local_graph(ebase, vertices, weight_col)
+    if graph is None:
         return None
-    cols = [table["src"], table["dst"]]
-    if vertices is not None:
-        cols.append(vertices.select(F.col("id").cast(vtype)).toArrow()[0])
-    all_ids = pa.concat_arrays([c.combine_chunks() for c in cols])
-    if all_ids.null_count:
-        return None
-    enc = all_ids.dictionary_encode()
-    codes = enc.indices.to_numpy()
-    m = table.num_rows
-    src, dst = codes[:m], codes[m : 2 * m]
-    n = len(enc.dictionary)
+    src, n = graph.src, graph.n
     # F.sum skips null weights, so a null weight contributes nothing
-    w = table["w"].fill_null(0.0).to_numpy()
+    w = graph.weight.fill_null(0.0).to_numpy()
     out_w = np.bincount(src, weights=w, minlength=n)
     if (out_w[src] == 0).any():
         return None
     dangling = np.ones(n, dtype=bool)
     dangling[src] = False
-    return enc.dictionary, src, dst, w / out_w[src], dangling
-
-
-def _positions(ids: pa.Array, table: pa.Table):
-    """Positions in ``ids`` of ``table``'s first column, and the mask of
-    rows whose id is in the graph."""
-    pos = pc.index_in(table.column(0), value_set=ids)
-    found = pos.is_valid().to_numpy(zero_copy_only=False)
-    return pos.fill_null(0).to_numpy(), found
+    return graph, w / out_w[src], dangling
 
 
 def _state_frame(spark, ids, vfield, dangling, rank, prev_rank, pv):
@@ -436,14 +404,15 @@ def _state_frame(spark, ids, vfield, dangling, rank, prev_rank, pv):
 
 
 def _pagerank_local(
-    spark, graph, vfield, alpha, max_iter, tol, personalization,
+    spark, graph, nw, dangling, alpha, max_iter, tol, personalization,
     init_scores, checkpoint_every, checkpoint_dir, resume,
 ) -> tuple[SuperstepResult, int]:
     """The DataFrame loop's recurrence, superstep for superstep, in numpy
     on the driver. Same stopping rule (L1 delta <= N*tol), same metrics
     rows, same checkpoint files."""
-    ids, src, dst, nw, dangling = graph
-    n = len(ids)
+    ids, vfield, src, dst, n = (
+        graph.ids, graph.vfield, graph.src, graph.dst, graph.n
+    )
     vtype = vfield.dataType
 
     pv = None
@@ -451,7 +420,7 @@ def _pagerank_local(
         p = personalization.select(
             F.col("id").cast(vtype), F.col("weight").cast("double")
         ).toArrow()
-        pos, found = _positions(ids, p)
+        pos, found = graph.positions(p)
         pw = p.column(1).fill_null(0.0).to_numpy()
         pv = np.bincount(pos[found], weights=pw[found], minlength=n)
         psum = pv.sum()
@@ -476,7 +445,7 @@ def _pagerank_local(
         r = init_scores.select(
             F.col("id").cast(vtype), F.col("rank").cast("double")
         ).toArrow()
-        pos, found = _positions(ids, r)
+        pos, found = graph.positions(r)
         found &= r.column(1).is_valid().to_numpy(zero_copy_only=False)
         x[pos[found]] = r.column(1).fill_null(0.0).to_numpy()[found]
         rsum = x.sum()
@@ -486,11 +455,13 @@ def _pagerank_local(
 
     metrics: list[dict] = []
     start_iter = 0
-    found_ckpt = read_checkpoint(spark, checkpoint_dir) if resume else None
+    found_ckpt = (
+        read_checkpoint(spark, checkpoint_dir, "pagerank") if resume else None
+    )
     if found_ckpt is not None:
         start_iter, ckpt, resume_row = found_ckpt
         r = ckpt.select(F.col("vertex").cast(vtype), "rank").toArrow()
-        pos, found = _positions(ids, r)
+        pos, found = graph.positions(r)
         if r.num_rows != n or not found.all():
             raise ValueError(
                 f"checkpoint under {checkpoint_dir} holds a different "

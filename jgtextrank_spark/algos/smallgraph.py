@@ -1,42 +1,233 @@
-"""Driver-side networkx fallback for all-pairs / linear-algebra centralities.
+"""Driver-side solves for graphs of at most ``SMALL_GRAPH_LIMIT`` edges.
 
-The reference dispatches betweenness, closeness, load, current-flow and
-communicability centralities straight to networkx
-(/root/reference/jgtextrank/core.py:804-838). These are O(V*E) or worse
-all-pairs algorithms with no web-scale distributed formulation — the
-reference itself only ever runs them on single-document graphs. We mirror
-that honestly: collect the (small) graph to the driver and run networkx,
-refusing above a vertex budget. The per-component wrapper reproduces
-``_weight_nodes_with_centrality_metrics`` (core.py:614-642): score each
-connected component separately, skip ZeroDivisionError components, drop
-inf-valued nodes.
+Two things live here.
+
+* **The shared fetch.** ``local_graph`` pulls an edge table of at most
+  ``SMALL_GRAPH_LIMIT`` (200 000) rows to the driver in one Arrow job and
+  encodes the vertex ids as int64 codes in Spark's sort order. PageRank,
+  hash-min components, label propagation and triangle counting all solve
+  such graphs in numpy on the driver, with no Spark job inside their
+  loops; ``label_loop`` is the superstep loop the two label solvers
+  share. Per-document co-occurrence graphs and most host graphs land
+  here, which is how the reference treats them too: one in-process
+  networkx call per graph (reference ``jgtextrank/core.py:614-642``).
+* **The networkx fallback** for all-pairs / linear-algebra centralities.
+  The reference dispatches betweenness, closeness, load, current-flow and
+  communicability centralities straight to networkx
+  (``core.py:804-838``). These are O(V*E) or worse all-pairs algorithms
+  with no web-scale distributed formulation — the reference itself only
+  ever runs them on single-document graphs. We mirror that honestly:
+  build the graph from the same bounded fetch and run networkx, refusing
+  above the limit. The per-component wrapper reproduces
+  ``_weight_nodes_with_centrality_metrics`` (core.py:614-642): score each
+  connected component separately, skip ZeroDivisionError components, drop
+  inf-valued nodes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import time
+from dataclasses import dataclass
+from typing import Callable
 
-__all__ = ["nx_fallback_scores", "SMALL_GRAPH_LIMIT"]
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..supersteps import SuperstepResult, read_checkpoint, write_checkpoint
+
+__all__ = [
+    "LocalGraph",
+    "SMALL_GRAPH_LIMIT",
+    "label_loop",
+    "local_graph",
+    "nx_fallback_scores",
+]
 
 SMALL_GRAPH_LIMIT = 200_000
+
+
+def _fetch(df: DataFrame) -> pa.Table | None:
+    """``df`` as an Arrow table, or None when it has more than
+    ``SMALL_GRAPH_LIMIT`` rows. One job both measures and fetches, and the
+    driver never holds more than ``SMALL_GRAPH_LIMIT + 1`` rows."""
+    table = df.limit(SMALL_GRAPH_LIMIT + 1).toArrow()
+    return None if table.num_rows > SMALL_GRAPH_LIMIT else table
+
+
+@dataclass
+class LocalGraph:
+    """An edge table on the driver. ``ids`` holds the distinct vertex ids
+    sorted in Spark's order (byte order for strings, natural order for
+    numbers), so comparing int64 codes compares ids; ``src``/``dst`` are
+    codes into it, one per edge row, and ``weight`` the edge weights as
+    doubles with nulls kept (None when no weight was fetched)."""
+
+    ids: pa.Array
+    vfield: T.StructField
+    src: np.ndarray
+    dst: np.ndarray
+    weight: pa.Array | None
+
+    @property
+    def n(self) -> int:
+        return len(self.ids)
+
+    def positions(self, table: pa.Table, col: int = 0):
+        """Codes of ``table``'s column ``col`` (cast to the vertex type by
+        the caller), and the mask of rows whose id is in the graph."""
+        pos = pc.index_in(table.column(col), value_set=self.ids)
+        found = pos.is_valid().to_numpy(zero_copy_only=False)
+        return pos.fill_null(0).to_numpy(), found
+
+
+def local_graph(
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    weight_col: str | None = None,
+) -> LocalGraph | None:
+    """Fetch ``edges`` (``src, dst`` and optionally ``weight_col``) plus
+    the ``id`` column of ``vertices`` to the driver. None when the graph
+    stays on the DataFrame path: more than ``SMALL_GRAPH_LIMIT`` edges or
+    a null id (the DataFrame loops' joins drop those)."""
+    ids = edges.select(F.col("src").alias("id")).unionByName(
+        edges.select(F.col("dst").alias("id"))
+    )
+    if vertices is not None:
+        ids = ids.unionByName(vertices.select("id"))
+    vfield = ids.schema["id"]
+    vtype = vfield.dataType
+    cols = [F.col("src").cast(vtype), F.col("dst").cast(vtype)]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double"))
+    table = _fetch(edges.select(*cols))
+    if table is None:
+        return None
+    arrays = [table.column(0), table.column(1)]
+    if vertices is not None:
+        arrays.append(vertices.select(F.col("id").cast(vtype)).toArrow()[0])
+    all_ids = pa.concat_arrays([a.combine_chunks() for a in arrays])
+    if all_ids.null_count:
+        return None
+    enc = all_ids.dictionary_encode()
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    codes = rank[enc.indices.to_numpy()]
+    m = table.num_rows
+    return LocalGraph(
+        ids=enc.dictionary.take(pa.array(order)),
+        vfield=vfield,
+        src=codes[:m],
+        dst=codes[m : 2 * m],
+        weight=(
+            table.column(2).combine_chunks() if weight_col is not None else None
+        ),
+    )
+
+
+def label_loop(
+    spark: SparkSession,
+    graph: LocalGraph,
+    labels: np.ndarray,
+    step: Callable[[np.ndarray], np.ndarray],
+    max_iter: int,
+    checkpoint_every: int,
+    checkpoint_dir: str | None,
+    resume: bool,
+    label: str,
+    label_nullable: bool,
+) -> SuperstepResult:
+    """``run_supersteps`` for a vertex-label state held as codes on the
+    driver: ``step(labels) -> new labels`` until no label changes or
+    ``max_iter``. Returns the same ``SuperstepResult`` as the DataFrame
+    loops (state ``vertex, label, prev_label``, one metrics row per round
+    with ``delta`` = changed labels, a ``"resume"`` row first on resume)
+    and writes and resumes the same checkpoint files."""
+    metrics: list[dict] = []
+    prev = None
+    start_iter = 0
+    found = read_checkpoint(spark, checkpoint_dir, label) if resume else None
+    if found is not None:
+        start_iter, ckpt, resume_row = found
+        vtype = graph.vfield.dataType
+        table = ckpt.select(
+            *(F.col(c).cast(vtype) for c in ("vertex", "label", "prev_label"))
+        ).toArrow()
+        pos, found_v = graph.positions(table, 0)
+        codes = [graph.positions(table, c) for c in (1, 2)]
+        if table.num_rows != graph.n or not (
+            found_v.all() and all(f.all() for _, f in codes)
+        ):
+            raise ValueError(
+                f"checkpoint under {checkpoint_dir} holds a different "
+                "vertex set than this graph"
+            )
+        labels = np.empty(graph.n, dtype=np.int64)
+        prev = np.empty(graph.n, dtype=np.int64)
+        labels[pos], prev[pos] = codes[0][0], codes[1][0]
+        metrics.append(resume_row)
+
+    def frame(cur, before):
+        vf = graph.vfield
+        fields = [
+            T.StructField("vertex", vf.dataType, vf.nullable),
+            T.StructField("label", vf.dataType, label_nullable),
+        ]
+        cols = [graph.ids, graph.ids.take(pa.array(cur))]
+        if before is not None:
+            fields.append(
+                T.StructField("prev_label", vf.dataType, label_nullable)
+            )
+            cols.append(graph.ids.take(pa.array(before)))
+        table = pa.table(cols, names=[f.name for f in fields])
+        return spark.createDataFrame(table, schema=T.StructType(fields))
+
+    converged = False
+    it = start_iter
+    for it in range(start_iter + 1, max_iter + 1):
+        t0 = time.perf_counter()
+        prev = labels
+        labels = step(prev)
+        delta = float(np.count_nonzero(labels != prev))
+        row = {
+            "iteration": it,
+            "wall_ms": (time.perf_counter() - t0) * 1000.0,
+            "delta": delta,
+            "event": "step",
+            "label": label,
+        }
+        if checkpoint_dir and checkpoint_every and it % checkpoint_every == 0:
+            write_checkpoint(
+                spark, checkpoint_dir, it, frame(labels, prev), delta, label
+            )
+            row["event"] = "checkpoint"
+        metrics.append(row)
+        if delta <= 0:
+            converged = True
+            break
+    return SuperstepResult(frame(labels, prev), it, converged, metrics)
 
 
 def _to_nx(edges: DataFrame, vertices: DataFrame | None, directed: bool):
     import networkx as nx
 
     G = nx.DiGraph() if directed else nx.Graph()
-    rows = edges.select("src", "dst", "weight").collect()
-    if len(rows) > SMALL_GRAPH_LIMIT:
+    table = _fetch(edges.select("src", "dst", "weight"))
+    if table is None:
         raise ValueError(
-            f"small-graph fallback refused: {len(rows)} edges > "
-            f"{SMALL_GRAPH_LIMIT}. These centralities have no scalable "
-            "distributed formulation; run them per-document."
+            f"small-graph fallback refused: more than {SMALL_GRAPH_LIMIT} "
+            "edges. These centralities have no scalable distributed "
+            "formulation; run them per-document."
         )
-    for r in rows:
-        G.add_edge(r["src"], r["dst"], weight=r["weight"])
+    G.add_weighted_edges_from(
+        zip(*(table.column(c).to_pylist() for c in ("src", "dst", "weight")))
+    )
     if vertices is not None:
-        G.add_nodes_from(v["id"] for v in vertices.collect())
+        G.add_nodes_from(vertices.select("id").toArrow()[0].to_pylist())
     return G
 
 

@@ -5,22 +5,42 @@ The reference exposes clustering via ``nx.clustering`` (solver
 c(v) = 2*T(v) / (deg(v) * (deg(v)-1)) on the *simple* graph (self-loops
 contribute neither triangles nor degree in nx.clustering).
 
-Distributed strategy (the standard degree-ordered wedge join — shuffle
-volume O(sum of squared degrees of the oriented graph), the best known
-DataFrame formulation; skew on hub vertices is capped because every edge is
+Both solvers list each triangle once with the standard degree-ordered
+wedge scheme (skew on hub vertices is capped because every edge is
 oriented from the (degree, id)-smaller endpoint to the larger):
 
 1. simple edges: drop self-loops, dedupe unordered pairs;
 2. orient u->v  iff  (deg(u), u) < (deg(v), v);
-3. wedges (a<b<c by order): oriented e(a,b) join oriented e(a,c), b != c;
-4. close each wedge against the oriented edge set (b,c);
+3. wedges (a<b<c by order): oriented e(a,b) and oriented e(a,c), b != c;
+4. close each wedge against the simple edge set (b,c);
 5. every closed triangle {a,b,c} credits all three vertices once.
+
+``triangle_counts`` picks the solver per call:
+
+* **Driver-local** (graphs of at most ``SMALL_GRAPH_LIMIT`` = 200 000
+  edges, ``algos/smallgraph.py``): one Arrow job fetches the edge table;
+  the wedges are enumerated over a CSR of the oriented edges in chunks of
+  ``WEDGE_CHUNK``, so driver memory stays bounded, and each wedge is
+  closed with ``searchsorted`` into the sorted canonical edge keys.
+* **DataFrame join** (larger graphs, or a null id): the wedges are a
+  self-join of the oriented edge table and are closed by a semi-join
+  against the canonical one — shuffle volume O(sum of squared degrees of
+  the oriented graph), the best known DataFrame formulation.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .smallgraph import local_graph
+
+# wedges enumerated per chunk by the driver-local count: ~50 MB of int64
+# working arrays whatever the graph's wedge total
+WEDGE_CHUNK = 1 << 20
 
 __all__ = ["triangle_counts", "clustering_coefficient", "simple_degrees", "k_truss"]
 
@@ -48,7 +68,12 @@ def simple_degrees(edges: DataFrame) -> DataFrame:
 
 
 def triangle_counts(edges: DataFrame, include_zero: bool = True) -> DataFrame:
-    """Per-vertex triangle counts: (vertex, triangles)."""
+    """Per-vertex triangle counts: (vertex, triangles). Graphs of at most
+    ``SMALL_GRAPH_LIMIT`` edges are counted on the driver (see the module
+    docstring)."""
+    graph = local_graph(edges)
+    if graph is not None:
+        return _triangle_counts_local(edges.sparkSession, graph, include_zero)
     se = _simple_edges(edges).persist()
     deg = simple_degrees(edges)
 
@@ -97,6 +122,55 @@ def triangle_counts(edges: DataFrame, include_zero: bool = True) -> DataFrame:
     if not include_zero:
         out = out.filter(F.col("triangles") > 0)
     return out
+
+
+def _triangle_counts_local(spark, graph, include_zero: bool) -> DataFrame:
+    n = graph.n
+    loop = graph.src != graph.dst
+    u = np.minimum(graph.src[loop], graph.dst[loop])
+    v = np.maximum(graph.src[loop], graph.dst[loop])
+    keys = np.unique(u * n + v)  # canonical simple edges, sorted
+    u, v = keys // n, keys % n
+    deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
+    # orient by (degree, code); codes follow Spark's id order
+    fwd = (deg[u] < deg[v]) | ((deg[u] == deg[v]) & (u < v))
+    src = np.where(fwd, u, v)
+    dst = np.where(fwd, v, u)
+    # CSR of the oriented edges, each row's targets ascending: edge i
+    # pairs with the later edges of its row, one wedge (a; b < c) each
+    order = np.lexsort((dst, src))
+    src, dst = src[order], dst[order]
+    row_end = np.cumsum(np.bincount(src, minlength=n))[src]
+    per_edge = row_end - np.arange(len(src)) - 1
+    ends = np.cumsum(per_edge)
+    tri = np.zeros(n, dtype=np.int64)
+    lo = 0
+    while lo < len(src):
+        done = ends[lo] - per_edge[lo]  # wedges before edge lo
+        hi = int(np.searchsorted(ends, done + WEDGE_CHUNK, "right"))
+        hi = max(hi, lo + 1)
+        counts = per_edge[lo:hi]
+        first = np.repeat(np.arange(lo, hi), counts)
+        starts = ends[lo:hi] - done - counts  # each edge's first wedge
+        rank = np.arange(len(first)) - np.repeat(starts, counts)
+        second = first + 1 + rank
+        wkey = dst[first] * n + dst[second]
+        at = np.searchsorted(keys, wkey)
+        closed = keys[np.minimum(at, len(keys) - 1)] == wkey
+        for x in (src[first], dst[first], dst[second]):
+            tri += np.bincount(x[closed], minlength=n)
+        lo = hi
+    keep = np.arange(n) if include_zero else np.flatnonzero(tri > 0)
+    vf = graph.vfield
+    table = pa.table(
+        [graph.ids.take(pa.array(keep)), tri[keep]],
+        names=["vertex", "triangles"],
+    )
+    schema = T.StructType([
+        T.StructField("vertex", vf.dataType, vf.nullable),
+        T.StructField("triangles", T.LongType(), False),
+    ])
+    return spark.createDataFrame(table, schema=schema)
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:

@@ -105,14 +105,23 @@ def write_checkpoint(
     return state_path
 
 
-def read_checkpoint(spark: SparkSession, checkpoint_dir: str | None):
+def read_checkpoint(
+    spark: SparkSession, checkpoint_dir: str | None, label: str
+):
     """The newest checkpoint under ``checkpoint_dir`` as ``(iteration,
     state, metrics row)``, or None. The row is the ``"resume"`` event a
-    resumed loop reports first."""
+    resumed loop reports first. Raises ``ValueError`` when the checkpoint
+    was written by a loop with a different ``label``: the state of one
+    algorithm is no starting point for another."""
     found = _find_resume_point(spark, checkpoint_dir)
     if found is None:
         return None
     iteration, path, meta = found
+    if meta.get("label") != label:
+        raise ValueError(
+            f"checkpoint under {checkpoint_dir} was written by "
+            f"{meta.get('label')!r}, not {label!r}"
+        )
     state = spark.read.parquet(os.path.join(path, "state"))
     row = {
         "iteration": iteration,
@@ -146,7 +155,7 @@ def run_supersteps(
     start_iter = 0
     state = initial_state
 
-    found = read_checkpoint(spark, checkpoint_dir) if resume else None
+    found = read_checkpoint(spark, checkpoint_dir, label) if resume else None
     if found is not None:
         start_iter, state, resume_row = found
         metrics.append(resume_row)

@@ -7,6 +7,10 @@ local[32] (4N), each in a fresh JVM (subprocess), with shuffle partitions
 scaled proportionally. Writes BENCH/BASELINE.md.
 
 Usage: python scripts/scaling_bench.py [--edges E] [--vertices V]
+
+``--edges`` must exceed ``SMALL_GRAPH_LIMIT`` (200 000): smaller graphs
+run their PageRank supersteps in numpy on the driver, where the Spark
+parallelism under test does not apply.
 """
 
 from __future__ import annotations
@@ -71,6 +75,17 @@ def main() -> None:
     ap.add_argument("--json-dir", default="/tmp/scaling_runs")
     ap.add_argument("--report", action="store_true")
     args = ap.parse_args()
+    sys.path.insert(0, str(REPO))
+    from jgtextrank_spark.algos.smallgraph import SMALL_GRAPH_LIMIT
+
+    if args.edges <= SMALL_GRAPH_LIMIT:
+        ap.error(
+            f"--edges {args.edges} is within SMALL_GRAPH_LIMIT "
+            f"({SMALL_GRAPH_LIMIT}): PageRank on such a graph runs its "
+            "supersteps in numpy on the driver, so the two parallelism "
+            "levels would time the same single-threaded loop. Pass more "
+            "edges."
+        )
 
     n, xn = args.n_cores, args.xn_cores
     jd = Path(args.json_dir)

@@ -137,16 +137,35 @@ def _stop_spark(spark):
 
 
 @pytest.fixture(params=["local", "dataframe"])
-def pagerank_path(request, monkeypatch):
-    """Run a PageRank test on both solvers. Every test graph is small
-    enough for the driver-local solve, so ``dataframe`` lowers the
-    local-solve edge limit to 0 for the test, forcing the DataFrame loop."""
+def solver_path(request, monkeypatch):
+    """Run a test on both solvers of PageRank, components, label
+    propagation and triangle counting. Every test graph is small enough
+    for the driver-local solve, so ``dataframe`` lowers the shared
+    local-solve edge limit (``smallgraph.SMALL_GRAPH_LIMIT``) to 0 for the
+    test, forcing the DataFrame loops."""
     if request.param == "dataframe":
-        import importlib
+        from jgtextrank_spark.algos import smallgraph
 
-        mod = importlib.import_module("jgtextrank_spark.algos.pagerank")
-        monkeypatch.setattr(mod, "SMALL_GRAPH_LIMIT", 0)
+        monkeypatch.setattr(smallgraph, "SMALL_GRAPH_LIMIT", 0)
     return request.param
+
+
+@pytest.fixture
+def solver_paths(monkeypatch):
+    """The ``solver_path`` switch as a loop, for tests that keep one id:
+    ``for path in solver_paths(): ...`` runs the block on the local
+    solvers, then on the DataFrame loops."""
+    from jgtextrank_spark.algos import smallgraph
+
+    def paths():
+        for path, limit in (
+            ("local", smallgraph.SMALL_GRAPH_LIMIT),
+            ("dataframe", 0),
+        ):
+            monkeypatch.setattr(smallgraph, "SMALL_GRAPH_LIMIT", limit)
+            yield path
+
+    return paths
 
 
 @pytest.fixture(scope="session")

@@ -56,43 +56,46 @@ def _nx_graph(edges, nodes=None):
 
 
 # ---------------------------------------------------------------- components
-def test_components_two_islands_and_isolated(spark):
+def test_components_two_islands_and_isolated(spark, solver_paths):
     edges = [(1, 2), (2, 3), (10, 11), (12, 12)]
     df = _edges_df(spark, edges)
     vdf = spark.createDataFrame([("99",)], "id string")
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(df, vertices=vdf).collect()
-    }
     G = _nx_graph(edges, nodes=[99])
-    for comp in nx.connected_components(G):
-        want_label = min(comp)
-        for v in comp:
-            assert got[v] == want_label
-    assert got["99"] == "99"
+    for path in solver_paths():
+        got = {
+            r["vertex"]: r["component"]
+            for r in connected_components(df, vertices=vdf).collect()
+        }
+        for comp in nx.connected_components(G):
+            want_label = min(comp)
+            for v in comp:
+                assert got[v] == want_label, path
+        assert got["99"] == "99", path
 
 
-def test_components_long_chain(spark):
+def test_components_long_chain(spark, solver_paths):
     n = 30
     edges = [(i, i + 1) for i in range(n)]
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(_edges_df(spark, edges)).collect()
-    }
-    assert set(got.values()) == {"0"}
-    assert len(got) == n + 1
+    for path in solver_paths():
+        got = {
+            r["vertex"]: r["component"]
+            for r in connected_components(_edges_df(spark, edges)).collect()
+        }
+        assert set(got.values()) == {"0"}, path
+        assert len(got) == n + 1, path
 
 
-def test_components_random(spark):
+def test_components_random(spark, solver_paths):
     edges = _rand_graph(seed=5, n=60, m=70)
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(_edges_df(spark, edges)).collect()
-    }
     G = _nx_graph(edges)
-    for comp in nx.connected_components(G):
-        labels = {got[v] for v in comp}
-        assert labels == {min(comp)}
+    for path in solver_paths():
+        got = {
+            r["vertex"]: r["component"]
+            for r in connected_components(_edges_df(spark, edges)).collect()
+        }
+        for comp in nx.connected_components(G):
+            labels = {got[v] for v in comp}
+            assert labels == {min(comp)}, path
 
 
 @pytest.mark.parametrize(
@@ -150,20 +153,21 @@ def test_components_star_contracts_edges(spark):
     assert counts[-1] == n
 
 
-def test_components_star_encoded(spark):
+def test_components_star_encoded(spark, solver_paths):
     edges = _rand_graph(seed=7, n=40, m=50)
     df = _edges_df(spark, edges)
-    want = {
-        r["vertex"]: r["component"]
-        for r in connected_components(df).collect()
-    }
     got = {
         r["vertex"]: r["component"]
         for r in connected_components(
             df, algorithm="star", encode_ids=True
         ).collect()
     }
-    assert got == want
+    for path in solver_paths():
+        want = {
+            r["vertex"]: r["component"]
+            for r in connected_components(df).collect()
+        }
+        assert got == want, path
 
 
 # ------------------------------------------------------------------ directed
@@ -246,34 +250,36 @@ def _lpa_oracle(edges, nodes, max_iter=10):
     return labels
 
 
-def test_lpa_matches_sequential_spec(spark):
+def test_lpa_matches_sequential_spec(spark, solver_paths):
     edges = _rand_graph(seed=21, n=40, m=60, selfloops=False)
     nodes = sorted({str(x) for e in edges for x in e})
-    got = {
-        r["vertex"]: r["label"]
-        for r in label_propagation(
-            _edges_df(spark, edges), max_iter=10
-        ).collect()
-    }
     want = _lpa_oracle(edges, nodes, max_iter=10)
-    assert got == want
+    for path in solver_paths():
+        got = {
+            r["vertex"]: r["label"]
+            for r in label_propagation(
+                _edges_df(spark, edges), max_iter=10
+            ).collect()
+        }
+        assert got == want, path
 
 
-def test_lpa_two_cliques(spark):
+def test_lpa_two_cliques(spark, solver_paths):
     cl1 = [(i, j) for i in range(4) for j in range(i + 1, 4)]
     cl2 = [(i, j) for i in range(10, 14) for j in range(i + 1, 14)]
     edges = cl1 + cl2 + [(3, 10)]
-    got = {
-        r["vertex"]: r["label"]
-        for r in label_propagation(
-            _edges_df(spark, edges), max_iter=10
-        ).collect()
-    }
-    assert {got[str(i)] for i in range(4)} == {"0"}
-    assert {got[str(i)] for i in range(10, 14)} == {"10"}
+    for path in solver_paths():
+        got = {
+            r["vertex"]: r["label"]
+            for r in label_propagation(
+                _edges_df(spark, edges), max_iter=10
+            ).collect()
+        }
+        assert {got[str(i)] for i in range(4)} == {"0"}, path
+        assert {got[str(i)] for i in range(10, 14)} == {"10"}, path
 
 
-def test_lpa_encoded_order_preserving(spark):
+def test_lpa_encoded_order_preserving(spark, solver_paths):
     """LPA tie-breaks to the SMALLEST label, so encoding is only sound if
     ids are monotone in string order. Stringified ints make lexicographic
     and numeric order disagree ('10' < '2'), which would corrupt a naive
@@ -281,15 +287,18 @@ def test_lpa_encoded_order_preserving(spark):
     exactly."""
     edges = _rand_graph(seed=13, n=30, m=45, selfloops=False)
     df = _edges_df(spark, edges)
-    plain = {
-        r["vertex"]: r["label"]
-        for r in label_propagation(df, max_iter=10).collect()
-    }
-    enc = {
-        r["vertex"]: r["label"]
-        for r in label_propagation(df, max_iter=10, encode_ids=True).collect()
-    }
-    assert enc == plain
+    for path in solver_paths():
+        plain = {
+            r["vertex"]: r["label"]
+            for r in label_propagation(df, max_iter=10).collect()
+        }
+        enc = {
+            r["vertex"]: r["label"]
+            for r in label_propagation(
+                df, max_iter=10, encode_ids=True
+            ).collect()
+        }
+        assert enc == plain, path
 
 
 def test_encode_vertices_order_preserving(spark):
@@ -304,32 +313,35 @@ def test_encode_vertices_order_preserving(spark):
 
 # ----------------------------------------------------------------- triangles
 @pytest.mark.parametrize("seed,n,m", [(3, 25, 60), (13, 50, 150)])
-def test_triangles_and_clustering(spark, seed, n, m):
+def test_triangles_and_clustering(spark, solver_paths, seed, n, m):
     edges = _rand_graph(seed=seed, n=n, m=m)
     df = _edges_df(spark, edges)
     G = _nx_graph(edges)
     G.remove_edges_from(nx.selfloop_edges(G))
     want_tri = nx.triangles(G)
     want_clu = nx.clustering(G)
-    got_tri = {
-        r["vertex"]: r["triangles"] for r in triangle_counts(df).collect()
-    }
-    got_clu = {
-        r["vertex"]: r["clustering"]
-        for r in clustering_coefficient(df).collect()
-    }
-    for v in want_tri:
-        assert got_tri[v] == want_tri[v], v
-        assert abs(got_clu[v] - want_clu[v]) < 1e-12, v
+    for path in solver_paths():
+        got_tri = {
+            r["vertex"]: r["triangles"]
+            for r in triangle_counts(df).collect()
+        }
+        got_clu = {
+            r["vertex"]: r["clustering"]
+            for r in clustering_coefficient(df).collect()
+        }
+        for v in want_tri:
+            assert got_tri[v] == want_tri[v], (path, v)
+            assert abs(got_clu[v] - want_clu[v]) < 1e-12, (path, v)
 
 
-def test_triangle_simple(spark):
+def test_triangle_simple(spark, solver_paths):
     edges = [(1, 2), (2, 3), (1, 3), (3, 4)]
-    got = {
-        r["vertex"]: r["triangles"]
-        for r in triangle_counts(_edges_df(spark, edges)).collect()
-    }
-    assert got == {"1": 1, "2": 1, "3": 1, "4": 0}
+    for path in solver_paths():
+        got = {
+            r["vertex"]: r["triangles"]
+            for r in triangle_counts(_edges_df(spark, edges)).collect()
+        }
+        assert got == {"1": 1, "2": 1, "3": 1, "4": 0}, path
 
 
 # -------------------------------------------------------------------- k-core

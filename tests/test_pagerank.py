@@ -34,14 +34,14 @@ def _collect(df):
     return {r["vertex"]: r["score"] for r in df.collect()}
 
 
-def test_simple_chain(spark, pagerank_path):
+def test_simple_chain(spark, solver_path):
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (1, 3, 2.0)]
     got = _collect(pagerank(_make_edges_df(spark, edges)))
     want = pagerank_edges([(str(s), str(d), w) for s, d, w in edges])
     _assert_allclose(got, want)
 
 
-def test_dangling_and_isolated(spark, pagerank_path):
+def test_dangling_and_isolated(spark, solver_path):
     # 4 is dangling (no out-edges), 9 is fully isolated.
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0), (1, 4, 0.5)]
     edf = _make_edges_df(spark, edges)
@@ -53,7 +53,7 @@ def test_dangling_and_isolated(spark, pagerank_path):
     _assert_allclose(got, want)
 
 
-def test_undirected_with_selfloop(spark, pagerank_path):
+def test_undirected_with_selfloop(spark, solver_path):
     edges = [(1, 2, 1.0), (2, 3, 1.0), (2, 2, 1.0), (3, 1, 1.0)]
     edf = _make_edges_df(spark, edges, directed=False)
     got = _collect(pagerank(edf))
@@ -63,7 +63,7 @@ def test_undirected_with_selfloop(spark, pagerank_path):
     _assert_allclose(got, want)
 
 
-def test_random_graph_weighted(spark, pagerank_path):
+def test_random_graph_weighted(spark, solver_path):
     rng = random.Random(42)
     n = 60
     edges = [
@@ -80,7 +80,7 @@ def test_random_graph_weighted(spark, pagerank_path):
     _assert_allclose(got, want)
 
 
-def test_convergence_metadata(spark, pagerank_path):
+def test_convergence_metadata(spark, solver_path):
     edges = [(1, 2, 1.0), (2, 1, 1.0)]
     res, n = pagerank_result(_make_edges_df(spark, edges))
     assert n == 2
@@ -91,7 +91,7 @@ def test_convergence_metadata(spark, pagerank_path):
     assert steps[-1]["delta"] <= 2 * 1e-6
 
 
-def test_checkpoint_resume(spark, tmp_path, pagerank_path):
+def test_checkpoint_resume(spark, tmp_path, solver_path):
     rng = random.Random(7)
     n = 40
     dedup = {}
@@ -121,7 +121,7 @@ def test_checkpoint_resume(spark, tmp_path, pagerank_path):
         assert abs(got[k] - v) <= 1e-6
 
 
-def test_personalized_pagerank_parity(spark, pagerank_path):
+def test_personalized_pagerank_parity(spark, solver_path):
     """Topic-sensitive PageRank vs the nx recurrence: teleport AND
     dangling mass follow the normalized personalization vector; vertices
     absent from the table get weight 0. Encoded path identical."""
@@ -176,7 +176,7 @@ def test_personalized_pagerank_parity(spark, pagerank_path):
         pagerank(edf, personalization=allout)
 
 
-def test_warm_start_same_fixpoint_fewer_supersteps(spark, pagerank_path):
+def test_warm_start_same_fixpoint_fewer_supersteps(spark, solver_path):
     """init_scores warm start: identical converged scores (1e-6), fewer
     supersteps when seeding from a near-identical graph's solution —
     the incremental-recompute path for crawl deltas."""
@@ -209,7 +209,7 @@ def test_warm_start_same_fixpoint_fewer_supersteps(spark, pagerank_path):
         assert abs(c[v] - w[v]) < 5e-6, v
 
 
-def test_warm_start_new_vertices_get_uniform_prior(spark, pagerank_path):
+def test_warm_start_new_vertices_get_uniform_prior(spark, solver_path):
     # prior covers only part of the graph + one out-of-graph id; the run
     # must still converge to the cold-start fixpoint
     edges = [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (3, 4, 1.0)]
@@ -224,7 +224,7 @@ def test_warm_start_new_vertices_get_uniform_prior(spark, pagerank_path):
         assert abs(c[v] - w[v]) < 5e-6, v
 
 
-def test_warm_start_encoded_matches_plain(spark, pagerank_path):
+def test_warm_start_encoded_matches_plain(spark, solver_path):
     edges = [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (1, 3, 0.5)]
     prior = spark.createDataFrame([("2", 0.7), ("3", 0.3)], ["id", "rank"])
     plain = {
@@ -244,7 +244,7 @@ def test_warm_start_encoded_matches_plain(spark, pagerank_path):
         assert abs(plain[v] - enc[v]) < 1e-9, v
 
 
-def test_warm_start_zero_mass_raises(spark, pagerank_path):
+def test_warm_start_zero_mass_raises(spark, solver_path):
     edges = [(1, 2, 1.0), (2, 1, 1.0)]
     bad = spark.createDataFrame([("1", -1.0), ("2", 0.0)], ["id", "rank"])
     with pytest.raises(Exception):
@@ -325,12 +325,11 @@ def test_pagerank_multi_seed_vs_nx(spark):
 # ------------------------------------------------- local solve vs DataFrame loop
 def _both_paths(monkeypatch, fn):
     """``fn()`` on the driver-local solve, then on the DataFrame loop."""
-    import importlib
+    from jgtextrank_spark.algos import smallgraph
 
-    mod = importlib.import_module("jgtextrank_spark.algos.pagerank")
     local = fn()
     with monkeypatch.context() as m:
-        m.setattr(mod, "SMALL_GRAPH_LIMIT", 0)
+        m.setattr(smallgraph, "SMALL_GRAPH_LIMIT", 0)
         loop = fn()
     return local, loop
 
@@ -390,9 +389,8 @@ def test_local_solve_matches_dataframe_loop(spark, monkeypatch, id_type):
 def test_checkpoint_resumes_across_paths(spark, monkeypatch, tmp_path, first):
     """A checkpoint written by one solver resumes on the other and ends at
     the uninterrupted fixpoint."""
-    import importlib
+    from jgtextrank_spark.algos import smallgraph as mod
 
-    mod = importlib.import_module("jgtextrank_spark.algos.pagerank")
     edges = _random_edges(7, 40, 250)
     edf = _make_edges_df(spark, edges)
     ckpt = str(tmp_path / "pr_ckpt")
@@ -416,7 +414,7 @@ def test_checkpoint_resumes_across_paths(spark, monkeypatch, tmp_path, first):
     _assert_allclose(_ranks(res2), want)
 
 
-def test_zero_weight_out_edges(spark, pagerank_path):
+def test_zero_weight_out_edges(spark, solver_path):
     """A zero-weight edge carries no rank; a source whose out-weights sum
     to zero is divided by, which raises under ANSI on both paths."""
     edges = [(1, 2, 1.0), (2, 3, 1.0), (2, 1, 0.0), (3, 1, 1.0), (3, 2, 2.0)]

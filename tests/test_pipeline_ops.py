@@ -693,7 +693,7 @@ def test_closeness_per_group_nx_parity(spark):
 # incremental connected components (insert-only warm labels)
 # ---------------------------------------------------------------------------
 
-def test_cc_warm_labels_same_output_fewer_supersteps(spark):
+def test_cc_warm_labels_same_output_fewer_supersteps(spark, solver_paths):
     from jgtextrank_spark.algos.components import (
         connected_components,
         connected_components_result,
@@ -705,26 +705,28 @@ def test_cc_warm_labels_same_output_fewer_supersteps(spark):
     mk = lambda rows: spark.createDataFrame(
         [(s, d, 1.0) for s, d in rows], ["src", "dst", "weight"]
     )
-    res_a = connected_components_result(mk(chain1 + chain2))
-    prior = res_a.state.select(
-        F.col("vertex").alias("id"), "label"
-    ).localCheckpoint(eager=True)
-
     # snapshot B: new edge MERGES the chains + a brand-new vertex pair
     delta = [("a015", "b015"), ("c000", "c001")]
     edges_b = mk(chain1 + chain2 + delta)
-    cold = connected_components_result(edges_b)
-    warm = connected_components_result(edges_b, init_labels=prior)
-    c = {r["vertex"]: r["label"] for r in cold.state.collect()}
-    w = {r["vertex"]: r["label"] for r in warm.state.collect()}
-    assert c == w
-    assert warm.converged and cold.converged
-    assert warm.iterations < cold.iterations
-    # merged component labeled by the global min, new pair by its own min
-    assert w["b030"] == "a000" and w["c001"] == "c000"
+    for path in solver_paths():
+        res_a = connected_components_result(mk(chain1 + chain2))
+        prior = res_a.state.select(
+            F.col("vertex").alias("id"), "label"
+        ).localCheckpoint(eager=True)
+
+        cold = connected_components_result(edges_b)
+        warm = connected_components_result(edges_b, init_labels=prior)
+        c = {r["vertex"]: r["label"] for r in cold.state.collect()}
+        w = {r["vertex"]: r["label"] for r in warm.state.collect()}
+        assert c == w, path
+        assert warm.converged and cold.converged, path
+        assert warm.iterations < cold.iterations, path
+        # merged component labeled by the global min, new pair by its
+        # own min
+        assert w["b030"] == "a000" and w["c001"] == "c000", path
 
 
-def test_cc_warm_labels_stale_target_dropped(spark):
+def test_cc_warm_labels_stale_target_dropped(spark, solver_paths):
     from jgtextrank_spark.algos.components import (
         connected_components_result,
     )
@@ -736,9 +738,11 @@ def test_cc_warm_labels_stale_target_dropped(spark):
     prior = spark.createDataFrame(
         [("x", "aaa_gone"), ("y", "aaa_gone")], ["id", "label"]
     )
-    res = connected_components_result(edges, init_labels=prior)
-    got = {r["vertex"]: r["label"] for r in res.state.collect()}
-    assert got == {"x": "x", "y": "x", "z": "x"}  # never a phantom label
+    for path in solver_paths():
+        res = connected_components_result(edges, init_labels=prior)
+        got = {r["vertex"]: r["label"] for r in res.state.collect()}
+        # never a phantom label
+        assert got == {"x": "x", "y": "x", "z": "x"}, path
 
 
 def test_cc_warm_labels_guards(spark):

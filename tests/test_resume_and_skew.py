@@ -22,50 +22,54 @@ def _edges_df(spark, edges):
     )
 
 
-def test_components_checkpoint_resume(spark, tmp_path):
+def test_components_checkpoint_resume(spark, tmp_path, solver_paths):
     n = 24
     edges = [(i, i + 1) for i in range(n)] + [(100, 101), (101, 102)]
     df = _edges_df(spark, edges)
-    ckpt = str(tmp_path / "cc_ckpt")
-    # budget-limited first run: must NOT converge
-    r1 = connected_components_result(
-        df, max_iter=2, checkpoint_every=1, checkpoint_dir=ckpt,
-        accelerated=False,
-    )
-    assert not r1.converged
-    # resumed run converges and is exact
-    r2 = connected_components_result(
-        df, max_iter=60, checkpoint_every=5, checkpoint_dir=ckpt,
-        accelerated=False,
-    )
-    assert r2.converged
-    assert any(m["event"] == "resume" for m in r2.metrics)
-    got = {
-        r["vertex"]: r["label"]
-        for r in r2.state.select("vertex", "label").collect()
-    }
     G = nx.Graph()
     G.add_edges_from((str(u), str(v)) for u, v in edges)
-    for comp in nx.connected_components(G):
-        assert {got[v] for v in comp} == {min(comp)}
+    for path in solver_paths():
+        ckpt = str(tmp_path / f"cc_ckpt_{path}")
+        # budget-limited first run: must NOT converge
+        r1 = connected_components_result(
+            df, max_iter=2, checkpoint_every=1, checkpoint_dir=ckpt,
+            accelerated=False,
+        )
+        assert not r1.converged, path
+        # resumed run converges and is exact
+        r2 = connected_components_result(
+            df, max_iter=60, checkpoint_every=5, checkpoint_dir=ckpt,
+            accelerated=False,
+        )
+        assert r2.converged, path
+        assert any(m["event"] == "resume" for m in r2.metrics), path
+        got = {
+            r["vertex"]: r["label"]
+            for r in r2.state.select("vertex", "label").collect()
+        }
+        for comp in nx.connected_components(G):
+            assert {got[v] for v in comp} == {min(comp)}, path
 
 
-def test_pointer_jumping_speeds_up_chain(spark):
+def test_pointer_jumping_speeds_up_chain(spark, solver_paths):
     n = 30
     edges = [(i, i + 1) for i in range(n)]
     df = _edges_df(spark, edges)
-    slow = connected_components_result(df, max_iter=60, accelerated=False)
-    fast = connected_components_result(df, max_iter=60, accelerated=True)
-    assert fast.converged and slow.converged
-    assert fast.iterations < slow.iterations / 2
-    got = {
-        r["vertex"]: r["label"]
-        for r in fast.state.select("vertex", "label").collect()
-    }
-    assert set(got.values()) == {"0"}
+    for path in solver_paths():
+        slow = connected_components_result(
+            df, max_iter=60, accelerated=False
+        )
+        fast = connected_components_result(df, max_iter=60, accelerated=True)
+        assert fast.converged and slow.converged, path
+        assert fast.iterations < slow.iterations / 2, path
+        got = {
+            r["vertex"]: r["label"]
+            for r in fast.state.select("vertex", "label").collect()
+        }
+        assert set(got.values()) == {"0"}, path
 
 
-def test_pagerank_on_skewed_hub_graph(spark, pagerank_path):
+def test_pagerank_on_skewed_hub_graph(spark, solver_path):
     """Power-law-style hub: one vertex receives 80% of edges — the skew
     case 100TB co-occurrence graphs hit. Scores must still match the
     oracle exactly."""
@@ -86,7 +90,7 @@ def test_pagerank_on_skewed_hub_graph(spark, pagerank_path):
         assert abs(got[k] - v) <= 1e-6
 
 
-def test_pagerank_salted_two_stage_matches(spark, pagerank_path):
+def test_pagerank_salted_two_stage_matches(spark, solver_path):
     """salt_buckets only reassociates the per-dst contribution sums; the
     salted two-stage tree must match the unsalted path ~exactly and the
     oracle to 1e-6 on the 80%-hub graph."""
@@ -114,7 +118,7 @@ def test_pagerank_salted_two_stage_matches(spark, pagerank_path):
         assert abs(salted[k] - v) <= 1e-6
 
 
-def test_pagerank_encoded_ids_matches(spark, pagerank_path):
+def test_pagerank_encoded_ids_matches(spark, solver_path):
     edges = [(i, (i * 7) % 23, 1.0 + (i % 2)) for i in range(40)]
     dedup = {(s, d): w for s, d, w in edges if s != d}
     edges = [(s, d, w) for (s, d), w in dedup.items()]
