@@ -374,15 +374,67 @@ def _local_graph(
     graph = local_graph(ebase, vertices, weight_col)
     if graph is None:
         return None
-    src, n = graph.src, graph.n
     # F.sum skips null weights, so a null weight contributes nothing
     w = graph.weight.fill_null(0.0).to_numpy()
+    normalized = _normalize(graph.src, w, graph.n)
+    return None if normalized is None else (graph, *normalized)
+
+
+def _normalize(src: np.ndarray, w: np.ndarray, n: int):
+    """``(nw, dangling)``: edge weights divided by their source's
+    out-weight, and the mask of vertices without out-edges. None when a
+    source's out-weights sum to zero."""
     out_w = np.bincount(src, weights=w, minlength=n)
     if (out_w[src] == 0).any():
         return None
     dangling = np.ones(n, dtype=bool)
     dangling[src] = False
-    return graph, w / out_w[src], dangling
+    return w / out_w[src], dangling
+
+
+def _power_steps(src, dst, nw, dangling, x, alpha, pv=None):
+    """networkx's PageRank recurrence from ``x``, one superstep per
+    ``next()``: yields ``(prev, x, delta)`` with ``delta`` the L1 change;
+    the caller decides when to stop. Edges are summed in ``(dst, src)``
+    order, so the scores do not depend on the order Spark returned the
+    edge rows in."""
+    order = np.lexsort((src, dst))
+    src, dst, nw = src[order], dst[order], nw[order]
+    n = len(x)
+    while True:
+        prev = x
+        dangle = prev[dangling].sum()
+        if pv is None:
+            base = alpha * dangle / n + (1.0 - alpha) / n
+        else:
+            base = (alpha * dangle + (1.0 - alpha)) * pv
+        x = alpha * np.bincount(dst, weights=nw * prev[src], minlength=n)
+        x += base
+        yield prev, x, float(np.abs(x - prev).sum())
+
+
+def pagerank_local_scores(
+    src: np.ndarray,
+    dst: np.ndarray,
+    n: int,
+    alpha: float = 0.85,
+    max_iter: int = 100,
+    tol: float = 1.0e-6,
+) -> np.ndarray:
+    """PageRank of an unweighted directed graph already on the driver
+    (``src``/``dst`` codes into ``n`` vertices): the local solve's
+    recurrence from the uniform vector, with its ``N*tol`` stopping
+    rule."""
+    if n == 0:
+        return np.empty(0)
+    nw, dangling = _normalize(src, np.ones(len(src)), n)
+    x = np.full(n, 1.0 / n)
+    steps = _power_steps(src, dst, nw, dangling, x, alpha)
+    for _ in range(max_iter):
+        _, x, delta = next(steps)
+        if delta <= n * tol:
+            break
+    return x
 
 
 def _state_frame(spark, ids, vfield, dangling, rank, prev_rank, pv):
@@ -471,20 +523,13 @@ def _pagerank_local(
         x[pos] = r.column(1).to_numpy()
         metrics.append(resume_row)
 
+    steps = _power_steps(src, dst, nw, dangling, x, alpha, pv)
     prev = x
     converged = False
     it = start_iter
     for it in range(start_iter + 1, max_iter + 1):
         t0 = time.perf_counter()
-        prev = x
-        dangle = prev[dangling].sum()
-        if pv is None:
-            base = alpha * dangle / n + (1.0 - alpha) / n
-        else:
-            base = (alpha * dangle + (1.0 - alpha)) * pv
-        x = alpha * np.bincount(dst, weights=nw * prev[src], minlength=n)
-        x += base
-        delta = float(np.abs(x - prev).sum())
+        prev, x, delta = next(steps)
         row = {
             "iteration": it,
             "wall_ms": (time.perf_counter() - t0) * 1000.0,

@@ -11,6 +11,8 @@ Two things live here.
   share. Per-document co-occurrence graphs and most host graphs land
   here, which is how the reference treats them too: one in-process
   networkx call per graph (reference ``jgtextrank/core.py:614-642``).
+  The TextRank driver path (``textrank.keywords_from_sentences``) fetches
+  and codes its token rows with the same ``fetch`` and ``sorted_codes``.
 * **The networkx fallback** for all-pairs / linear-algebra centralities.
   The reference dispatches betweenness, closeness, load, current-flow and
   communicability centralities straight to networkx
@@ -42,20 +44,33 @@ from ..supersteps import SuperstepResult, read_checkpoint, write_checkpoint
 __all__ = [
     "LocalGraph",
     "SMALL_GRAPH_LIMIT",
+    "fetch",
     "label_loop",
     "local_graph",
     "nx_fallback_scores",
+    "sorted_codes",
 ]
 
 SMALL_GRAPH_LIMIT = 200_000
 
 
-def _fetch(df: DataFrame) -> pa.Table | None:
+def fetch(df: DataFrame) -> pa.Table | None:
     """``df`` as an Arrow table, or None when it has more than
     ``SMALL_GRAPH_LIMIT`` rows. One job both measures and fetches, and the
     driver never holds more than ``SMALL_GRAPH_LIMIT + 1`` rows."""
     table = df.limit(SMALL_GRAPH_LIMIT + 1).toArrow()
     return None if table.num_rows > SMALL_GRAPH_LIMIT else table
+
+
+def sorted_codes(values: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """``(ids, codes)``: the distinct values sorted in Spark's order (byte
+    order for strings, natural order for numbers) and each value's int64
+    code into them, so comparing codes compares values."""
+    enc = values.dictionary_encode()
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    return enc.dictionary.take(pa.array(order)), rank[enc.indices.to_numpy()]
 
 
 @dataclass
@@ -103,7 +118,7 @@ def local_graph(
     cols = [F.col("src").cast(vtype), F.col("dst").cast(vtype)]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("double"))
-    table = _fetch(edges.select(*cols))
+    table = fetch(edges.select(*cols))
     if table is None:
         return None
     arrays = [table.column(0), table.column(1)]
@@ -112,14 +127,10 @@ def local_graph(
     all_ids = pa.concat_arrays([a.combine_chunks() for a in arrays])
     if all_ids.null_count:
         return None
-    enc = all_ids.dictionary_encode()
-    order = pc.sort_indices(enc.dictionary).to_numpy()
-    rank = np.empty(len(order), dtype=np.int64)
-    rank[order] = np.arange(len(order))
-    codes = rank[enc.indices.to_numpy()]
+    ids, codes = sorted_codes(all_ids)
     m = table.num_rows
     return LocalGraph(
-        ids=enc.dictionary.take(pa.array(order)),
+        ids=ids,
         vfield=vfield,
         src=codes[:m],
         dst=codes[m : 2 * m],
@@ -216,7 +227,7 @@ def _to_nx(edges: DataFrame, vertices: DataFrame | None, directed: bool):
     import networkx as nx
 
     G = nx.DiGraph() if directed else nx.Graph()
-    table = _fetch(edges.select("src", "dst", "weight"))
+    table = fetch(edges.select("src", "dst", "weight"))
     if table is None:
         raise ValueError(
             f"small-graph fallback refused: more than {SMALL_GRAPH_LIMIT} "

@@ -24,12 +24,34 @@ DataFrame re-expression of the reference post-processing
 Collapse parity mode uses one global ordering window (fine per document /
 small corpora — exactly the reference's regime); ``per_doc=True`` keeps
 islands within documents and distributes fully (the scalable mode).
+
+``keywords_from_sentences`` runs the pipeline one of two ways.
+
+* **Driver path** (corpora of at most ``SMALL_GRAPH_LIMIT`` = 200 000
+  token rows, counting each stream token and each filtered token once,
+  with the PageRank solvers): one Spark job fetches the token rows with
+  ``limit(...).toArrow()``, which stops early on a larger corpus. The
+  co-occurrence edges, PageRank (the local solve's recurrence), top-T,
+  collapse and per-term aggregates then run in numpy, with words coded in
+  Spark's sort order so ties break as on the DataFrame path. Spark applies
+  the weight formula, its rounding and the final order to one row per
+  term; ``gcvalue`` runs ``_gcvalue`` over candidate frames built from
+  Arrow.
+* **DataFrame path** (larger corpora, other solvers, a null ``url``,
+  ``sent_id`` or token): the stage functions below over one persisted
+  ``(url, sent_id, tokens, filtered)`` projection. The result is cached
+  and the intermediate frames are released before the call returns.
+
+Both paths return the same rows.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -66,6 +88,8 @@ SOLVERS = [
     "edge_current_flow_betweenness",
     "communicability_betweenness",
 ]
+
+_PAGERANK_SOLVERS = ("pagerank", "pagerank_numpy", "pagerank_scipy")
 
 WEIGHT_COMBS = [
     "avg", "norm_avg", "log_norm_avg", "gaussian_norm_avg", "len_log_norm_avg",
@@ -112,7 +136,7 @@ def solve_scores(
             "networkx directed semantics differ; run undirected or use "
             "the dedicated algos module)"
         )
-    if solver in ("pagerank", "pagerank_numpy", "pagerank_scipy"):
+    if solver in _PAGERANK_SOLVERS:
         # numpy/scipy variants are removed in networkx >= 3; all three are
         # the same converged power iteration (SURVEY.md §4.3).
         return pagerank(
@@ -206,6 +230,10 @@ def collapse_candidates(
             order_win.rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
+    # the last row of the stream: no row follows it in the same window
+    marked = marked.withColumn(
+        "at_end", F.lead(F.lit(1)).over(order_win).isNull()
+    )
     part_cols = ["url", "grp"] if per_doc else ["grp"]
     islands = (
         marked.filter(F.col("is_kw"))
@@ -214,7 +242,7 @@ def collapse_candidates(
             F.array_sort(
                 F.collect_list(F.struct("gpos", "token"))
             ).alias("run"),
-            F.max("gpos").alias("end_gpos"),
+            F.max("at_end").alias("at_end"),
         )
         .withColumn(
             "term_tokens", F.transform("run", lambda x: x["token"])
@@ -223,10 +251,7 @@ def collapse_candidates(
     if not per_doc:
         # reference quirk: the final buffer is never flushed -> a keyword
         # run touching the end of the stream is dropped (core.py:926-934)
-        total = marked.agg(F.max("gpos").alias("m"))
-        islands = islands.join(F.broadcast(total)).filter(
-            F.col("end_gpos") != F.col("m")
-        )
+        islands = islands.filter(~F.col("at_end"))
     return islands.select(
         F.monotonically_increasing_id().alias("cand_id"),
         "term_tokens",
@@ -305,11 +330,11 @@ def weigh_candidates(
     mu: int = 5,
 ) -> DataFrame:
     """Candidate occurrences + vertex scores -> distinct (term, score),
-    keeping only candidates containing a top-T vertex."""
+    keeping only candidates containing a top-T vertex. The plan reads
+    ``candidates`` more than once; callers persist it."""
     if weight_comb == "gcvalue":
         return _gcvalue(candidates, scores, top_t)
 
-    candidates = candidates.persist()
     # sigma over ALL candidate occurrences, population stddev
     # (metrics.py:244-252), computed before the top-T connection filter
     sigma = 0.0
@@ -353,14 +378,12 @@ def _gcvalue(
     occurrence) with token-set(a) ⊆ token-set(b), list(a) != list(b).
     gcvalue(a) = log2(|a|+0.1) * (g(a) - mean over longer-occurrences g(b)),
     g = len_log_norm_avg (already rounded to 5 before combining, as ref)."""
-    candidates = candidates.persist()
     member = _member_scores(candidates, scores)
     g = (
         candidates.join(member, "cand_id")
         .withColumn("sigma", F.lit(0.0))
         .withColumn("g", _gvalue_expr("len_log_norm_avg", 5))
         .select("cand_id", "term", "term_tokens", "n_tokens", "g")
-        .persist()
     )
     # distinct surface forms with occurrence counts
     forms = g.groupBy("term").agg(
@@ -370,7 +393,7 @@ def _gcvalue(
         F.count(F.lit(1)).alias("occ"),
     ).withColumn(
         "tok_set", F.array_distinct(F.array_sort("term_tokens"))
-    ).persist()
+    )
 
     # Containment join (a ⊆ b) via rarest-token prefix filtering: every
     # superset of a must contain a's globally rarest token, so indexing a
@@ -458,7 +481,12 @@ def keywords_from_sentences(
     """Full pipeline mirror of
     ``_keywords_extraction_from_preprocessed_context`` (core.py:711-872):
     sentences -> co-occurrence graph -> solver -> top-T -> collapse ->
-    weigh. Returns (term, score) ordered by score desc, term asc."""
+    weigh. Returns (term, score) ordered by score desc, term asc.
+
+    The pipeline has run when this returns. The driver path's result is a
+    frame over per-term rows held on the driver; the DataFrame path's
+    result is cached, its intermediate frames are released, and
+    ``unpersist()`` on the result frees the rest."""
     if solver not in SOLVERS:
         raise ValueError(f"Unsupported solver: {solver!r}")
     if weighted:
@@ -467,26 +495,215 @@ def keywords_from_sentences(
             "(core.py:939-942); use cooccurrence_edges(weighted=True) for "
             "the generalized engine."
         )
-    # NOTE (measured, r6): the sentence frame is read three times below
-    # (edges, vertex universe, collapse), but persisting it is a small net
-    # LOSS at sf0.1 cold AND warm (A/B 2x2 cold sessions: persist
-    # 20.3/20.0s vs nopersist 19.6/18.1s; warm interleaved avg 9.37 vs
-    # 8.75s) — caching the wide nested tagged frame costs more than
-    # re-running the Arrow tagger on warm workers. Left unpersisted.
+    if solver in _PAGERANK_SOLVERS and set(solver_kwargs) <= {"alpha"}:
+        local = _keywords_local(
+            sentences, window, top_p, top_t, conn_with_original_ctx,
+            max_iter, tol, solver_kwargs.get("alpha", 0.85), weight_comb,
+            mu, per_doc_collapse,
+        )
+        if local is not None:
+            return local
+
+    # one extraction: every branch below reads this narrow projection
+    narrow = sentences.select(
+        "url",
+        "sent_id",
+        "tokens",
+        F.transform(
+            "filtered", lambda x: F.struct(x["token"].alias("token"))
+        ).alias("filtered"),
+    ).persist()
     edges = cooccurrence_edges(
-        sentences,
+        narrow,
         window=window,
         conn_with_original_ctx=conn_with_original_ctx,
         weighted=False,
     ).persist()
-    vertices = vertices_from_sentences(sentences).persist()
+    vertices = vertices_from_sentences(narrow).persist()
     scores = solve_scores(
         edges, vertices, solver=solver, max_iter=max_iter, tol=tol,
         directed=directed, **solver_kwargs,
     ).persist()
     top = top_t_vertices(scores, top_p=top_p, top_t=top_t).persist()
-    cands = collapse_candidates(sentences, scores, per_doc=per_doc_collapse)
-    weighted_terms = weigh_candidates(
-        cands, scores, top, weight_comb=weight_comb, mu=mu
+    cands = collapse_candidates(
+        narrow, scores, per_doc=per_doc_collapse
+    ).persist()
+    out = (
+        weigh_candidates(cands, scores, top, weight_comb=weight_comb, mu=mu)
+        .orderBy(F.desc("score"), F.asc("term"))
+        .persist()
     )
-    return weighted_terms.orderBy(F.desc("score"), F.asc("term"))
+    out.count()
+    for df in (narrow, edges, vertices, scores, top, cands):
+        df.unpersist()
+    return out
+
+
+def _token_rows(sentences: DataFrame) -> DataFrame:
+    """One row per token occurrence ``(url, sent_id, pos, accepted,
+    token)``: a sentence's stream tokens (``accepted`` false), then its
+    filtered tokens (``accepted`` true), numbered in that order by
+    ``pos``."""
+
+    def rows(col, accepted, token):
+        return F.transform(
+            col,
+            lambda x: F.struct(
+                F.lit(accepted).alias("accepted"), token(x).alias("token")
+            ),
+        )
+
+    both = F.concat(
+        rows("tokens", False, lambda x: x),
+        rows("filtered", True, lambda x: x["token"]),
+    )
+    return sentences.select(
+        "url", "sent_id", F.posexplode(both).alias("pos", "t")
+    ).select("url", "sent_id", "pos", "t.accepted", "t.token")
+
+
+def _keywords_local(
+    sentences, window, top_p, top_t, conn_with_original_ctx, max_iter, tol,
+    alpha, weight_comb, mu, per_doc,
+) -> DataFrame | None:
+    """The pipeline in numpy on the driver, after one Arrow fetch of the
+    token rows; Spark only applies the weight formula and the final order
+    to one row per term. None when the corpus has more than
+    ``SMALL_GRAPH_LIMIT`` token rows, a null url, sent_id or token, or two
+    sentence rows with the same ``(url, sent_id)``."""
+    from .algos.pagerank import pagerank_local_scores
+    from .algos.smallgraph import fetch, sorted_codes
+
+    table = fetch(_token_rows(sentences))
+    if table is None or any(
+        table.column(c).null_count for c in ("url", "sent_id", "token")
+    ):
+        return None
+    # the collapse window's order: (url, sent_id), then position
+    table = table.take(
+        pc.sort_indices(
+            table,
+            sort_keys=[(c, "ascending") for c in ("url", "sent_id", "pos")],
+        )
+    )
+    pos = table.column("pos").to_numpy()
+    sid = table.column("sent_id").to_numpy()
+    accepted = table.column("accepted").to_numpy()
+    doc = sorted_codes(table.column("url").combine_chunks())[1]
+    words, code = sorted_codes(table.column("token").combine_chunks())
+    n_words = len(words)
+    new_doc = np.ones(len(pos), dtype=bool)
+    new_doc[1:] = doc[1:] != doc[:-1]
+    new_sent = new_doc.copy()
+    new_sent[1:] |= sid[1:] != sid[:-1]
+    if (~new_sent[1:] & (pos[1:] == pos[:-1])).any():
+        return None
+    sent = np.cumsum(new_sent)
+
+    # vertices: the accepted words, numbered in id order
+    is_vertex = np.zeros(n_words, dtype=bool)
+    is_vertex[code[accepted]] = True
+    vid = np.cumsum(is_vertex) - 1
+    n = int(is_vertex.sum())
+
+    # co-occurrence edges: pairs within `window` in one sentence's context,
+    # both ends accepted, undirected and distinct
+    ctx = ~accepted if conn_with_original_ctx else accepted
+    c, s = code[ctx], sent[ctx]
+    a, b = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+    for d in range(1, window + 1):
+        same = s[d:] == s[:-d]
+        if not same.any():
+            break
+        x, y = c[:-d][same], c[d:][same]
+        keep = is_vertex[x] & is_vertex[y]
+        a.append(vid[x[keep]])
+        b.append(vid[y[keep]])
+    a, b = np.concatenate(a), np.concatenate(b)
+    key = np.unique(np.minimum(a, b) * n + np.maximum(a, b))
+    lo, hi = key // max(n, 1), key % max(n, 1)
+    loop = lo == hi
+    rank = pagerank_local_scores(
+        np.concatenate([lo, hi[~loop]]),
+        np.concatenate([hi, lo[~loop]]),
+        n, alpha=alpha, max_iter=max_iter, tol=tol,
+    )
+    score = np.zeros(n_words)
+    score[is_vertex] = rank
+    # top-T: score desc, ties to the smaller id
+    n_top = int(round(n * top_p)) if top_t is None else int(top_t)
+    top = np.argsort(-rank, kind="stable")[:n_top]
+    in_top = np.zeros(n_words, dtype=bool)
+    in_top[np.flatnonzero(is_vertex)[top]] = True
+
+    # candidates: runs of scored tokens over the stream (per document with
+    # per_doc); the reference never flushes a run that reaches the end
+    stream, stream_doc = code[~accepted], doc[~accepted]
+    kw = is_vertex[stream]
+    start = kw.copy()
+    start[1:] &= ~kw[:-1] | (per_doc & (stream_doc[1:] != stream_doc[:-1]))
+    run = (np.cumsum(start) - 1)[kw]
+    members = stream[kw]
+    n_runs = int(start.sum())
+    if not per_doc and len(kw) and kw[-1]:
+        n_runs -= 1
+        members = members[run < n_runs]
+        run = run[run < n_runs]
+    n_tokens = np.bincount(run, minlength=n_runs)
+    term_tokens = pa.ListArray.from_arrays(
+        pa.array(np.concatenate([[0], np.cumsum(n_tokens)]), pa.int32()),
+        words.take(pa.array(members)),
+    )
+    terms = pc.binary_join(term_tokens, " ")
+
+    spark = sentences.sparkSession
+    if weight_comb == "gcvalue":
+        out = _gcvalue(
+            spark.createDataFrame(
+                pa.table(
+                    [pa.array(np.arange(n_runs)), term_tokens, terms,
+                     pa.array(n_tokens, pa.int32())],
+                    names=["cand_id", "term_tokens", "term", "n_tokens"],
+                )
+            ),
+            spark.createDataFrame(
+                pa.table(
+                    [words.filter(pa.array(is_vertex)), pa.array(rank)],
+                    names=["vertex", "score"],
+                )
+            ),
+            spark.createDataFrame(
+                pa.table([words.filter(pa.array(in_top))], names=["vertex"])
+            ),
+        )
+        return out.orderBy(F.desc("score"), F.asc("term"))
+
+    # per-term aggregates over distinct members: sum of scores, max of
+    # score / multiplicity; every occurrence of a term gives the same row
+    pair, k = np.unique(run * n_words + members, return_counts=True)
+    r, w = pair // n_words, pair % n_words
+    sum_score = np.bincount(r, weights=score[w], minlength=n_runs)
+    max_score = np.full(n_runs, -np.inf)
+    np.maximum.at(max_score, r, score[w] / k)
+    touches = np.bincount(run, weights=in_top[members], minlength=n_runs) > 0
+    first = np.unique(
+        terms.dictionary_encode().indices.to_numpy(), return_index=True
+    )[1]
+    first = pa.array(first[touches[first]])
+    per_term = pa.table(
+        [
+            terms.take(first),
+            pa.array(n_tokens, pa.int32()).take(first),
+            pa.array(sum_score).take(first),
+            pa.array(max_score).take(first),
+        ],
+        names=["term", "n_tokens", "sum_score", "max_score"],
+    )
+    # population stddev of the lengths of all candidate occurrences
+    sigma = float(n_tokens.std()) if n_runs else 0.0
+    return (
+        spark.createDataFrame(per_term)
+        .withColumn("sigma", F.lit(sigma))
+        .select("term", _gvalue_expr(weight_comb, mu).alias("score"))
+        .orderBy(F.desc("score"), F.asc("term"))
+    )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import sys
 import types
+from pathlib import Path
 
 import pytest
 
@@ -96,7 +97,8 @@ def _install_nltk_stub():
 
 _install_nltk_stub()
 sys.path.insert(0, "/root/reference")  # reference package as oracle
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, wherever it lives
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 @pytest.fixture(scope="session")
