@@ -5,6 +5,7 @@ construction; these tests pin it)."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 from pyspark.sql import functions as F
 
@@ -41,6 +42,24 @@ def _write_pages(spark, tmp_path):
     return path
 
 
+def _finish(q, timeout=180):
+    """Wait for ``q`` to finish its input, then stop it. A query whose
+    state has processing-time timeouts never terminates under
+    ``availableNow``: once the input is processed Spark keeps running
+    batches without input rows to check the timeouts. A second such
+    batch therefore means the query has done all its work. A query that
+    needs a batch without input (an event-time flush) runs at most one
+    and then terminates by itself."""
+    deadline = time.monotonic() + timeout
+    try:
+        while not q.awaitTermination(0.5) and time.monotonic() < deadline:
+            idle = {p.batchId for p in q.recentProgress if p.numInputRows == 0}
+            if len(idle) >= 2:
+                break
+    finally:
+        q.stop()
+
+
 def _run(spark, df, name, mode):
     q = (
         df.writeStream.format("memory")
@@ -49,7 +68,7 @@ def _run(spark, df, name, mode):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _finish(q)
     return spark.table(name)
 
 
@@ -246,7 +265,7 @@ def test_streaming_minhash_verified_matches_batch(spark, tmp_path):
         verify_threshold=0.5,
     )
     q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(180)
+    _finish(q)
 
     batch_docs = spark.createDataFrame(
         [(k, v) for k, v in texts.items()], "doc_id string, text string"
@@ -358,7 +377,7 @@ def test_streaming_minhash_dedup_sink_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        _finish(q)
 
     run("ck1")
     rows = [
@@ -476,7 +495,7 @@ def test_streaming_pagerank_warm_equals_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _finish(q, 300)
 
     run_available()
     spark.createDataFrame(b2, "src string, dst string, weight double").coalesce(
@@ -535,7 +554,7 @@ def test_streaming_communities_equal_batch_sequence(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _finish(q, 300)
 
     run_available()
     spark.createDataFrame(b2, "src string, dst string, weight double").coalesce(
