@@ -53,7 +53,6 @@ def betweenness_sampled(
     directed: bool = False,
     rescale_sample: bool = True,
     max_depth: int = 200,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``(vertex, betweenness)`` over every graph vertex (0.0 for
     vertices on no sampled shortest path).
@@ -68,8 +67,7 @@ def betweenness_sampled(
     Raises if BFS exceeds ``max_depth`` levels (diameter guard — a
     partial sweep would silently under-count)."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # one traversal of the input lineage (the symmetrizing union reads it
     # twice, and the page-graph gate feeds the whole link-extraction
@@ -88,7 +86,7 @@ def betweenness_sampled(
     # per-level joins need anyway (guide §2.4)
     adj = (
         adj.filter(F.col("src") != F.col("dst"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .dropDuplicates(["src", "dst"])
         .persist()
     )
@@ -136,7 +134,7 @@ def betweenness_sampled(
             F.col("s").alias("v"),
             F.lit(1.0).alias("sigma"),
         )
-        .repartition(num_partitions, "s", "v")
+        .repartition(n_parts, "s", "v")
         .localCheckpoint(eager=True)
     )
     levels = [cur]          # levels[d] = (s, v, sigma) first reached at d
@@ -189,7 +187,7 @@ def betweenness_sampled(
     # true dst-side orientation: one dst-partitioned cached copy, built
     # once, replaces the per-level exchanges.
     if directed:
-        adj_t = adj.repartition(num_partitions, "dst").persist()
+        adj_t = adj.repartition(n_parts, "dst").persist()
     else:
         adj_t = adj
     bc_parts = []

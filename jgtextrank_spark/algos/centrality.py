@@ -42,6 +42,10 @@ __all__ = [
     "katz_centrality",
 ]
 
+# Vertex sets up to this size are broadcast into the DataFrame loop's
+# per-superstep joins; larger ones take shuffle joins.
+BROADCAST_THRESHOLD = 2_000_000
+
 
 def _neighbors(edges: DataFrame, keep_self_loops: bool) -> DataFrame:
     """Distinct neighbour pairs (src, dst) of the undirected graph; a
@@ -215,11 +219,9 @@ def core_numbers_hindex_result(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 200,
-    num_partitions: int | None = None,
     checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    broadcast_threshold: int = 2_000_000,
 ):
     """Core numbers via the distributed h-index iteration (Lü et al. 2016:
     repeatedly replacing h(v), initialized to deg(v), with the H-operator
@@ -250,8 +252,7 @@ def core_numbers_hindex_result(
     from pyspark.sql import Window
 
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     und = (
         edges.filter(F.col("src") != F.col("dst"))
@@ -264,7 +265,7 @@ def core_numbers_hindex_result(
     adj = (
         und.select(F.col("a").alias("v"), F.col("b").alias("u"))
         .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .repartition(num_partitions, "u")
+        .repartition(n_parts, "u")
         .persist()
     )
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("h"))
@@ -274,7 +275,7 @@ def core_numbers_hindex_result(
     # runtime choice (a shrinking frontier still converts to broadcast
     # at runtime once it is small enough)
     n_verts = verts.count()
-    bcast = n_verts <= broadcast_threshold
+    bcast = n_verts <= BROADCAST_THRESHOLD
 
     def _b(df):
         return F.broadcast(df) if bcast else df
@@ -339,7 +340,7 @@ def core_numbers_hindex_result(
         grp = (
             msgs
             .join(hu, "u")
-            .repartition(num_partitions, "v")
+            .repartition(n_parts, "v")
             .groupBy("v", "h_u")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
@@ -475,7 +476,6 @@ def hits(
     vertices: DataFrame | None = None,
     max_iter: int = 100,
     tol: float = 1.0e-8,
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -492,11 +492,10 @@ def hits(
     if the flag itself matters at the boundary.
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
         edges.select("src", "dst", F.col("weight").cast("double").alias("w"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = _vertices(edges, vertices).persist()
@@ -610,18 +609,16 @@ def eigenvector_centrality(
     vertices: DataFrame | None = None,
     max_iter: int = 100,
     tol: float = 1.0e-6,
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """nx.eigenvector_centrality parity: x' = x + A^T x, L2-normalized,
     stop when L1 change < N*tol. (vertex, score). ``edges`` directed."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
         edges.select("src", "dst", F.col("weight").cast("double").alias("w"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = _vertices(edges, vertices).persist()
@@ -679,7 +676,6 @@ def katz_centrality(
     beta: float = 1.0,
     max_iter: int = 1000,
     tol: float = 1.0e-6,
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -687,11 +683,10 @@ def katz_centrality(
     L1 change < N*tol, then L2-normalize * sqrt(N)... (nx normalizes by
     s = 1/sqrt(sum x^2)). (vertex, score). ``edges`` directed."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
         edges.select("src", "dst", F.col("weight").cast("double").alias("w"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = _vertices(edges, vertices).persist()

@@ -52,11 +52,9 @@ def connected_components_result(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
-    num_partitions: int | None = None,
     checkpoint_every: int = 5,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    broadcast_threshold: int = 2_000_000,
     accelerated: bool = True,
     init_labels: DataFrame | None = None,
 ) -> SuperstepResult:
@@ -90,11 +88,9 @@ def connected_components_result(
     rounds vs 11 on two bridged 1k-chains).
 
     Graphs of at most ``SMALL_GRAPH_LIMIT`` edges are solved on the
-    driver (see the module docstring); ``num_partitions`` and
-    ``broadcast_threshold`` shape only the DataFrame loop."""
+    driver (see the module docstring)."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # Materialize the NARROW edge projection once, then derive the vertex
     # universe, the warm-start joins and the adjacency from the cache: the
@@ -171,7 +167,7 @@ def connected_components_result(
         .select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     # fill the adjacency cache before the loop (the first fused round

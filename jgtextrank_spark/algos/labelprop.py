@@ -40,38 +40,38 @@ from .smallgraph import label_loop, local_graph
 
 __all__ = ["label_propagation", "label_propagation_result"]
 
+# Vertex sets up to this size are broadcast into the DataFrame loop's
+# per-superstep joins; larger ones take shuffle joins.
+BROADCAST_THRESHOLD = 2_000_000
+
 
 def label_propagation_result(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 10,
     weighted: bool = True,
-    num_partitions: int | None = None,
     checkpoint_every: int = 5,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    broadcast_threshold: int = 2_000_000,
 ) -> SuperstepResult:
     """Synchronous label propagation; state ``(vertex, label,
     prev_label)``. ``weighted=False`` counts every edge as one vote.
     Graphs of at most ``SMALL_GRAPH_LIMIT`` edges are solved on the
-    driver (see the module docstring); ``num_partitions`` and
-    ``broadcast_threshold`` shape only the DataFrame loop."""
+    driver (see the module docstring)."""
     spark = edges.sparkSession
     graph = local_graph(edges, vertices, "weight" if weighted else None)
     if graph is not None and not (weighted and _odd_weights(graph.weight)):
         return _label_propagation_local(
             spark, graph, max_iter, checkpoint_every, checkpoint_dir, resume
         )
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     w = F.col("weight").cast("double") if weighted else F.lit(1.0)
     adj = (
         symmetrize(edges)
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst", w.alias("w"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = edges.select(F.col("src").alias("vertex")).unionByName(
@@ -80,7 +80,7 @@ def label_propagation_result(
     if vertices is not None:
         verts = verts.unionByName(vertices.select(F.col("id").alias("vertex")))
     init = verts.distinct().withColumn("label", F.col("vertex")).persist()
-    bcast = init.count() <= broadcast_threshold
+    bcast = init.count() <= BROADCAST_THRESHOLD
 
     def _b(df):
         return F.broadcast(df) if bcast else df

@@ -43,14 +43,12 @@ __all__ = ["link_prediction", "cocitation", "bibliographic_coupling"]
 def link_prediction(
     edges: DataFrame,
     max_center_degree: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """DataFrame ``(u, v, cn, jaccard, adamic_adar)`` for every
     non-adjacent pair (u < v) with at least one common neighbor.
     ``edges`` rows are any orientation; self-loops ignored."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     und = (
         edges.select("src", "dst")
@@ -64,7 +62,7 @@ def link_prediction(
     adj = (
         und.select(F.col("a").alias("w"), F.col("b").alias("n"))
         .unionByName(und.select(F.col("b").alias("w"), F.col("a").alias("n")))
-        .repartition(num_partitions, "w")
+        .repartition(n_parts, "w")
         .persist()
     )
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -116,7 +114,6 @@ def _directed_cosimilarity(
     center_col: str,
     leaf_col: str,
     max_center_degree: int,
-    num_partitions: int | None,
 ) -> DataFrame:
     """Shared wedge engine for cocitation / bibliographic coupling: pairs
     of *leaf* vertices sharing a *center* (the directed analogue of the
@@ -135,8 +132,7 @@ def _directed_cosimilarity(
     centers' contributions vanish from n_common with documented recall
     loss. 0 disables the guard (exact — the oracle/test mode)."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = (
         edges.select(
@@ -144,7 +140,7 @@ def _directed_cosimilarity(
         )
         .filter(F.col("w") != F.col("n"))
         .distinct()
-        .repartition(num_partitions, "w")
+        .repartition(n_parts, "w")
         .persist()
     )
     leaf_deg = e.groupBy("n").agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -182,7 +178,6 @@ def _directed_cosimilarity(
 def cocitation(
     edges: DataFrame,
     max_center_degree: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Co-citation similarity (Small 1973): for each unordered pair of
     pages (u < v) cited by at least one common source, the number of
@@ -190,21 +185,16 @@ def cocitation(
     their in-link sets. Generalizes the reference's co-occurrence edge
     weighting (graph.py builds term edges from shared windows; this
     builds page-similarity pairs from shared citers)."""
-    return _directed_cosimilarity(
-        edges, "src", "dst", max_center_degree, num_partitions
-    )
+    return _directed_cosimilarity(edges, "src", "dst", max_center_degree)
 
 
 def bibliographic_coupling(
     edges: DataFrame,
     max_center_degree: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Bibliographic coupling (Kessler 1963): pairs of pages (u < v)
     citing at least one common target — ``n_common`` = (A A^T)[u, v] and
     the Jaccard of their out-link sets. The out-link dual of
     :func:`cocitation`; centers are shared *targets*, so the hub guard
     bounds target in-degree."""
-    return _directed_cosimilarity(
-        edges, "dst", "src", max_center_degree, num_partitions
-    )
+    return _directed_cosimilarity(edges, "dst", "src", max_center_degree)

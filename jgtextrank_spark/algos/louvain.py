@@ -57,6 +57,10 @@ __all__ = [
     "refine_partition",
 ]
 
+# Vertex sets up to this size are broadcast into the DataFrame loop's
+# per-superstep joins; larger ones take shuffle joins.
+BROADCAST_THRESHOLD = 5_000_000
+
 _DEC = "decimal(38,0)"
 
 
@@ -156,7 +160,6 @@ def louvain_move_phase(
     round_offset: int = 0,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> tuple[DataFrame, int, bool, list[dict]]:
     """One Louvain local-move phase: (assignment, rounds, converged,
     metrics). ``init`` is an optional (vertex, community) start (default
@@ -176,8 +179,8 @@ def louvain_move_phase(
     measured 1s -> 178s by round 10 on a 30-vertex graph)."""
     spark = edges.sparkSession
     mirror, _selfw, kv = _sym_parts(edges)
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    mirror = mirror.repartition(num_partitions, "a").persist()
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    mirror = mirror.repartition(n_parts, "a").persist()
     kv = kv.persist()
     m2 = kv.agg(F.sum("k").alias("s")).collect()[0]["s"] or 0.0
     if m2 <= 0:
@@ -199,7 +202,7 @@ def louvain_move_phase(
         return start, 0, True, []
     m2i = int(round(m2))
     n_verts = kv.count()
-    bcast = n_verts <= broadcast_threshold
+    bcast = n_verts <= BROADCAST_THRESHOLD
 
     def _b(df):
         # explicit broadcast while the state is small: under static
@@ -285,7 +288,7 @@ def louvain_move_phase(
                     F.col("k").alias("k0"),
                 )
             )
-            .repartition(num_partitions, "vertex")
+            .repartition(n_parts, "vertex")
             .groupBy("vertex", "c")
             .agg(
                 F.sum("w").alias("kvc"),

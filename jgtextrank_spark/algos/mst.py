@@ -75,7 +75,6 @@ def msf_perturbed_weights(edges: DataFrame) -> DataFrame:
 def boruvka_msf(
     edges: DataFrame,
     weight_col: str = "weight",
-    num_partitions: int | None = None,
     max_iter: int = 40,
 ) -> DataFrame:
     """Minimum spanning forest: DataFrame ``(u, v, weight)``, one row per
@@ -85,8 +84,7 @@ def boruvka_msf(
     minimum weight. Isolated vertices contribute no rows (a forest has
     no edges there)."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = F.col(weight_col).cast("double")
     e = (
         edges.filter(F.col("src") != F.col("dst"))
@@ -97,7 +95,7 @@ def boruvka_msf(
         )
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .repartition(num_partitions, "u")
+        .repartition(n_parts, "u")
         .persist()
     )
     comp = (

@@ -114,7 +114,6 @@ def hyperball_result(
     edges: DataFrame,
     max_iter: int = 64,
     lg_k: int = 12,
-    num_partitions: int | None = None,
     checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
     resume: bool = True,
@@ -148,11 +147,10 @@ def hyperball_result(
     missing for any superstep (older-version checkpoint, file deleted),
     this raises instead of returning a silently truncated n_t."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     adj = (
-        _adj(edges, directed).repartition(num_partitions, "u").persist()
+        _adj(edges, directed).repartition(n_parts, "u").persist()
     )
     init = (
         _verts(edges)

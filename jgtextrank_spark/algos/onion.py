@@ -31,6 +31,10 @@ from ..supersteps import run_supersteps
 
 __all__ = ["OnionResult", "onion_decomposition"]
 
+# Vertex sets up to this size are broadcast into the DataFrame loop's
+# per-superstep joins; larger ones take shuffle joins.
+BROADCAST_THRESHOLD = 5_000_000
+
 
 @dataclass
 class OnionResult:
@@ -45,24 +49,23 @@ def onion_decomposition(
     max_rounds: int = 100_000,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> OnionResult:
     """Peel the undirected simple graph of ``(src, dst)``; see module
     docstring. Self-loops ignored; parallel edges collapse."""
     spark = edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     nonself = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     sym = (
         nonself.unionByName(
             nonself.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = sym.select(F.col("src").alias("vertex")).distinct()
     n_verts = verts.count()
-    bcast = n_verts <= broadcast_threshold
+    bcast = n_verts <= BROADCAST_THRESHOLD
 
     def _b(df):
         return F.broadcast(df) if bcast else df

@@ -59,6 +59,10 @@ from .smallgraph import local_graph
 
 __all__ = ["pagerank", "pagerank_result", "trustrank", "spam_mass"]
 
+# Vertex sets up to this size are broadcast into the DataFrame loop's
+# per-superstep joins; larger ones take shuffle joins.
+BROADCAST_THRESHOLD = 2_000_000
+
 
 def pagerank_result(
     edges: DataFrame,
@@ -67,12 +71,9 @@ def pagerank_result(
     max_iter: int = 100,
     tol: float = 1.0e-6,
     weight_col: str = "weight",
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    broadcast_threshold: int = 2_000_000,
-    truncate_every: int = 1,
     salt_buckets: int = 0,
     personalization: DataFrame | None = None,
     init_scores: DataFrame | None = None,
@@ -121,12 +122,10 @@ def pagerank_result(
     agreement with the unsalted path and 1e-6 vs the oracle.
 
     Graphs of at most ``SMALL_GRAPH_LIMIT`` edges are solved on the
-    driver (see the module docstring); ``num_partitions``,
-    ``broadcast_threshold``, ``truncate_every`` and ``salt_buckets`` shape
-    only the DataFrame loop and are ignored there."""
+    driver (see the module docstring); ``salt_buckets`` shapes only the
+    DataFrame loop and is ignored there."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # one traversal of the (possibly expensive) input lineage: the vertex
     # union, the out-degree aggregate and the normalized adjacency below
@@ -196,7 +195,7 @@ def pagerank_result(
     # per-superstep joins: each superstep becomes map-only over the cached
     # edge partitions (no shuffle at all). Above the threshold, shuffle
     # joins against the pre-partitioned adjacency take over.
-    bcast = n <= broadcast_threshold
+    bcast = n <= BROADCAST_THRESHOLD
 
     norm_edges = ebase.join(out_deg, "src").select(
         "src",
@@ -213,9 +212,9 @@ def pagerank_result(
         # the two-stage aggregation only (below).
         norm_edges = norm_edges.withColumn(
             "salt", F.pmod(F.xxhash64("dst"), F.lit(salt_buckets))
-        ).repartition(num_partitions, "src", "salt")
+        ).repartition(n_parts, "src", "salt")
     else:
-        norm_edges = norm_edges.repartition(num_partitions, "src")
+        norm_edges = norm_edges.repartition(n_parts, "src")
     norm_edges = norm_edges.persist()
     norm_edges.count()  # materialize adjacency once
     ebase.unpersist()   # verts + norm_edges now hold everything the loop needs
@@ -356,7 +355,6 @@ def pagerank_result(
         checkpoint_dir=checkpoint_dir,
         resume=resume,
         label="pagerank",
-        truncate_every=truncate_every,
     )
     verts.unpersist()
     norm_edges.unpersist()
@@ -649,7 +647,6 @@ def pagerank_multi_seed(
     alpha: float = 0.85,
     max_iter: int = 20,
     weight_col: str = "weight",
-    num_partitions: int | None = None,
     dense: bool = False,
     min_score: float = 0.0,
 ) -> DataFrame:
@@ -687,8 +684,7 @@ def pagerank_multi_seed(
     are keyed by (seed, vertex) — S is the throughput knob exactly as
     in sampled betweenness."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     if isinstance(seeds, DataFrame):
         seed_df = seeds.select(F.col(seeds.columns[0]).alias("s")).distinct()
@@ -727,7 +723,7 @@ def pagerank_multi_seed(
             (F.col(weight_col) / F.col("out_w")).alias("prob"),
             F.coalesce("ddang", F.lit(False)).alias("ddang"),
         )
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     seed_dang = seed_df.join(
@@ -753,7 +749,7 @@ def pagerank_multi_seed(
         F.col("s").alias("vertex"),
         F.lit(1.0).alias("score"),
         F.col("sdang").alias("dang"),
-    ).repartition(num_partitions, "s", "vertex").localCheckpoint(eager=True)
+    ).repartition(n_parts, "s", "vertex").localCheckpoint(eager=True)
 
     for it in range(1, max_iter + 1):
         # the state grows from S rows to O(S * reach): never let a

@@ -65,7 +65,6 @@ def bfs_distances_result(
     seeds,
     directed: bool = True,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
     resume: bool = True,
@@ -81,8 +80,7 @@ def bfs_distances_result(
     a round reaches no new vertex (delta = newly reached count).
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     adj = edges.select("src", "dst")
     if not directed:
@@ -92,7 +90,7 @@ def bfs_distances_result(
     adj = (
         adj.filter(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
 
@@ -160,7 +158,6 @@ def sssp_result(
     seeds,
     directed: bool = True,
     max_iter: int = 200,
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
     resume: bool = True,
@@ -180,8 +177,7 @@ def sssp_result(
     hop counts, -log edge probabilities — are non-negative).
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     neg = edges.agg(F.min("weight").alias("m")).collect()[0]["m"]
     if neg is not None and float(neg) < 0:
@@ -200,7 +196,7 @@ def sssp_result(
         adj.filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.min("weight").alias("weight"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
 
@@ -394,7 +390,6 @@ def landmark_distances_result(
     num_landmarks: int = 8,
     directed: bool = False,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
     resume: bool = True,
@@ -411,8 +406,7 @@ def landmark_distances_result(
     landmarks cost one loop of diameter rounds, not k loops.
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if landmarks is None:
         landmarks = select_landmarks(edges, num_landmarks, directed)
     if not landmarks:
@@ -426,14 +420,14 @@ def landmark_distances_result(
     adj = (
         adj.filter(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
 
     init = spark.createDataFrame(
         [(str(x), str(x), 0) for x in landmarks],
         "landmark string, vertex string, dist int",
-    ).repartition(num_partitions, "vertex")
+    ).repartition(n_parts, "vertex")
 
     def step(state: DataFrame, it: int) -> tuple[DataFrame, float]:
         frontier = state.filter(F.col("dist") == it - 1).select(

@@ -102,7 +102,6 @@ def strongly_connected_components(
     vertices: DataFrame | None = None,
     max_outer: int = 100,
     max_inner: int = 500,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every_outer: int = 1,
     resume: bool = True,
@@ -124,8 +123,7 @@ def strongly_connected_components(
     (``max_inner`` supersteps for coloring/BFS; ``max_outer``
     peel-extract rounds); partial SCC labels are never returned."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
@@ -153,7 +151,7 @@ def strongly_connected_components(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
     )
     V = edges.select(F.col("src").alias("vertex")).unionByName(
         edges.select(F.col("dst").alias("vertex"))
@@ -172,7 +170,7 @@ def strongly_connected_components(
             V = _ckpt(spark.read.parquet(os.path.join(path, "v")))
             E = _ckpt(
                 spark.read.parquet(os.path.join(path, "e")).repartition(
-                    num_partitions, "src"
+                    n_parts, "src"
                 )
             )
             assigned = [_ckpt(spark.read.parquet(os.path.join(path, "assigned")))]
@@ -193,7 +191,7 @@ def strongly_connected_components(
             "outer": outer,
             "n_v": V.count(),
             "n_assigned": acc.count(),
-            "partitions": num_partitions,
+            "partitions": n_parts,
         }
         # meta last: its presence marks the three tables as complete
         fsutil.write_text(

@@ -30,6 +30,10 @@ from ..supersteps import run_supersteps
 
 __all__ = ["TopoResult", "topological_layers"]
 
+# Vertex sets up to this size are broadcast into the DataFrame loop's
+# per-superstep joins; larger ones take shuffle joins.
+BROADCAST_THRESHOLD = 5_000_000
+
 
 @dataclass
 class TopoResult:
@@ -46,16 +50,15 @@ def topological_layers(
     max_rounds: int = 100_000,
     checkpoint_every: int = 10,
     checkpoint_dir: str | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> TopoResult:
     """Layer the digraph ``(src, dst)``; see module docstring."""
     spark = edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = (
@@ -64,7 +67,7 @@ def topological_layers(
         .distinct()
     )
     n_verts = verts.count()
-    bcast = n_verts <= broadcast_threshold
+    bcast = n_verts <= BROADCAST_THRESHOLD
 
     def _b(df):
         return F.broadcast(df) if bcast else df

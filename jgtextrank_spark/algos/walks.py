@@ -51,7 +51,6 @@ def random_walks(
     walk_length: int = 10,
     seed: str = "w42",
     weight_col: str | None = "weight",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """DataFrame ``(walk_id, step, vertex)`` — step 0 is the start
     vertex; ``walk_id = <start>#<replica>``. Directed semantics: steps
@@ -60,8 +59,7 @@ def random_walks(
     from pyspark.sql import Window
 
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None and weight_col in edges.columns
@@ -88,7 +86,7 @@ def random_walks(
             ((F.col("cum") - F.col("w")) / F.col("tot")).alias("lo"),
             (F.col("cum") / F.col("tot")).alias("hi"),
         )
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     verts = (
@@ -161,7 +159,6 @@ def node2vec_walks(
     q: float = 1.0,
     seed: str = "w42",
     weight_col: str | None = "weight",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Second-order (node2vec) biased walks: ``(walk_id, step, vertex)``.
 
@@ -193,8 +190,7 @@ def node2vec_walks(
     from pyspark.sql import Window
 
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None and weight_col in edges.columns
@@ -204,7 +200,7 @@ def node2vec_walks(
         edges.filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.sum(w).alias("w"))
-        .repartition(num_partitions, "src")
+        .repartition(n_parts, "src")
         .persist()
     )
     # first-order ranges for step 1 (no prev yet) — same build as

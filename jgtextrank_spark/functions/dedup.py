@@ -562,7 +562,6 @@ def paragraph_dedup(
     df: DataFrame,
     text_col: str = "text",
     sep: str = "\n",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Corpus-wide PARAGRAPH-level exact dedup (the CCNet line-dedup
     operator, Wenzek et al. 2020): split every document on ``sep``, drop
@@ -587,8 +586,7 @@ def paragraph_dedup(
     per-doc aggregation to reassemble. No global window, no Python; md5
     keys keep the whole decision bit-replayable in DuckDB."""
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     from pyspark.sql import Window
 
     paras = df.select(
@@ -606,7 +604,7 @@ def paragraph_dedup(
     )
     kept = ranked.filter(F.col("blank") | (F.col("rn") == 1))
     rebuilt = (
-        kept.repartition(num_partitions, "doc_id")
+        kept.repartition(n_parts, "doc_id")
         .groupBy("doc_id")
         .agg(
             F.concat_ws(

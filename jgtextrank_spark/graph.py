@@ -58,8 +58,8 @@ def materialize_input(edges: DataFrame, *cols: str):
     ``unpersist()`` the returned frame (a no-op if it wasn't persisted
     here) once their own cached frames are filled.
 
-    Skipped when the caller already persisted the input (bench harnesses
-    do): a second copy would only add cache-write cost."""
+    Skipped when the caller already persisted the input: a second copy
+    would only add cache-write cost."""
     proj = edges.select(*cols)
     lvl = edges.storageLevel
     if lvl.useMemory or lvl.useDisk:

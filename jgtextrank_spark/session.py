@@ -1,7 +1,7 @@
 """SparkSession factory with scale-oriented defaults.
 
 All engine entry points accept an externally-created session; this helper
-exists so tests, ``bench.py`` and the CLI agree on configuration. The
+exists so tests, the benchmark and the CLI agree on configuration. The
 defaults are the ones that matter at 100 TB:
 
 * AQE on (runtime re-plan, skew-join splitting, partition coalescing),

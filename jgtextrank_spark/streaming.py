@@ -22,7 +22,7 @@ Design notes for the cluster:
   the watermark horizon, i.e. bounded memory at any corpus size.
 * No new shuffle shapes: everything reuses the batch expressions
   (``graph.cooccurrence_pairs``, ``textstats.fingerprint_expr``), so the
-  plan properties audited in EXPLAIN.md carry over.
+  batch plans' properties carry over.
 """
 
 from __future__ import annotations
@@ -535,8 +535,8 @@ def streaming_pagerank_sink(
     from the previous batch's converged scores — the crawl-delta
     recomputation pattern (``pagerank_result(init_scores=...)``): on a
     small delta the power iteration restarts next to its fixpoint and
-    converges in a fraction of the cold supersteps (measured in
-    ``bench.py`` ``bench_warm_start``).
+    converges in fewer supersteps than a cold run (asserted by
+    ``tests/test_pagerank.py``).
 
     Exactly-once mechanics follow :func:`streaming_minhash_dedup_sink`:
     batch N overwrites its own partition ``<state_dir>/edges/batch_id=N``

@@ -5,16 +5,15 @@ HITS, connected components, LPA, k-core...) is a driver-side loop of
 DataFrame jobs. This harness centralizes the physical concerns that make
 such loops survive hundreds of supersteps at 100 TB scale:
 
-* **Lineage truncation**: each iteration's state is persisted and the
-  previous one unpersisted; every ``checkpoint_every`` iterations the state
-  is ``localCheckpoint``-ed (or reliably checkpointed to ``checkpoint_dir``)
-  so the logical plan doesn't grow without bound.
+* **Lineage truncation**: each superstep's state is ``localCheckpoint``-ed
+  and the previous one unpersisted, so the logical plan doesn't grow
+  without bound; every ``checkpoint_every`` supersteps it is also written
+  reliably to ``checkpoint_dir``.
 * **Checkpoint-resume**: with ``checkpoint_dir`` set, state parquet +
   a meta JSON (iteration, delta, partitioning lineage) is written per
   checkpoint; ``run_supersteps`` resumes from the newest valid checkpoint.
 * **Per-superstep metrics**: (iteration, wall_ms, delta, state rows if
-  cheap, partition count, checkpoint events) accumulated and returned —
-  the bench harness turns these into edges/sec-per-superstep.
+  cheap, partition count, checkpoint events) accumulated and returned.
 
 The step function owns the algorithm: ``step(state, i) -> (new_state,
 delta)`` where ``delta`` is the algorithm's convergence measure (L1 error,
@@ -143,7 +142,6 @@ def run_supersteps(
     checkpoint_dir: str | None = None,
     resume: bool = True,
     label: str = "supersteps",
-    truncate_every: int = 1,
 ) -> SuperstepResult:
     """Run ``step`` until ``delta <= tolerance`` or ``max_iter``.
 
@@ -175,10 +173,9 @@ def run_supersteps(
         # still grows per iteration, making Catalyst analysis O(iterations)
         # per superstep (quadratic overall). localCheckpoint over the
         # already-cached state is a cheap O(state) copy that resets the plan.
-        if truncate_every and it % truncate_every == 0:
-            truncated = new_state.localCheckpoint(eager=True)
-            new_state.unpersist()
-            new_state = truncated
+        truncated = new_state.localCheckpoint(eager=True)
+        new_state.unpersist()
+        new_state = truncated
         wall_ms = (time.monotonic() - t0) * 1000.0
         state.unpersist()
         state = new_state

@@ -18,6 +18,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
+SF_DIR = "/root/testdata/sf0.01"
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -48,13 +50,8 @@ def compare(spark_rows, duck_rows, cols):
     return False, {"pairwise": diff, "spark_only": only_a, "duck_only": only_b}
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    from jgtextrank_spark.session import get_spark
-
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+def open_duckdb(sf_dir):
+    """A DuckDB connection with one view per parquet table in ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -62,12 +59,18 @@ def main():
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
             )
+    return con
 
+
+def check(spark, con, sf_dir, names=None):
+    """Run the queries named in ``names`` (all when empty) on Spark and
+    their oracles on ``con``; print one line per query and return
+    ``{name: (status, detail)}``."""
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     results = {}
     for name, fn in queries.items():
-        if only and name not in only:
+        if names and name not in names:
             continue
         t0 = time.time()
         try:
@@ -122,7 +125,16 @@ def main():
             f"({time.time() - t0:.1f}s)"
             + (f" diff={diff}" if diff else "")
         )
+    return results
 
+
+def main():
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
+
+    from jgtextrank_spark.session import get_spark
+
+    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    results = check(spark, open_duckdb(sf_dir), sf_dir, set(sys.argv[2:]))
     bad = {k: v for k, v in results.items() if v[0] not in ("OK", "ROWS-ONLY")}
     print(f"\n{len(results) - len(bad)}/{len(results)} OK; failures: {list(bad)}")
     return 1 if bad else 0

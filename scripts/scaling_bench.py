@@ -27,8 +27,9 @@ _RUNNER = """
 import json, sys, time, os
 os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 sys.path.insert(0, {repo!r})
+sys.path.insert(0, {scripts!r})
 from jgtextrank_spark.session import get_spark
-from bench import bench_pagerank_convergence
+from scaling_bench import bench_pagerank_convergence
 spark = get_spark(master="local[{cores}]", shuffle_partitions={parts},
                   app_name="scaling-bench")
 spark.sparkContext.setLogLevel("ERROR")
@@ -37,10 +38,70 @@ print("RESULT_JSON:" + json.dumps(r))
 """
 
 
+def synth_powerlaw_edges(spark, n_vertices: int, n_edges: int, seed: int = 42):
+    """Deterministic skewed directed edge table (src, dst, weight).
+
+    src ~ uniform over vertices; dst = floor(V * u^3) for u uniform from a
+    hash — mass concentrates at low ids, giving power-law-ish in-degree
+    hubs (the skew case the partitioning strategy must survive)."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(n_edges)
+    u_src = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(n_vertices))
+    h = F.pmod(F.xxhash64("id", F.lit(seed + 1)), F.lit(1_000_000_007))
+    u = h.cast("double") / 1_000_000_007.0
+    dst = F.floor(F.lit(float(n_vertices)) * F.pow(u, F.lit(3.0)))
+    w = 1.0 + F.pmod(F.xxhash64("id", F.lit(seed + 2)), F.lit(5)).cast(
+        "double"
+    )
+    return ids.select(
+        u_src.cast("long").alias("src"),
+        dst.cast("long").alias("dst"),
+        w.alias("weight"),
+    )
+
+
+def bench_pagerank_convergence(
+    spark,
+    n_vertices: int,
+    n_edges: int,
+    absolute_delta: float = 1.0e-6,
+    max_iter: int = 100,
+) -> dict:
+    """Converged PageRank on the synthetic graph; returns the throughput
+    numbers ``main`` reports.
+
+    Convergence is the BASELINE criterion read literally: total L1 delta
+    < 1e-6 (networkx's stop is err < N*tol, so we pass tol =
+    absolute_delta / N)."""
+    from jgtextrank_spark.algos.pagerank import pagerank_result
+
+    edges = synth_powerlaw_edges(spark, n_vertices, n_edges).persist()
+    real_edges = edges.count()
+    res, n = pagerank_result(
+        edges,
+        tol=absolute_delta / max(1, n_vertices),
+        max_iter=max_iter,
+        checkpoint_every=0,
+    )
+    steps = [m for m in res.metrics if m["event"] == "step"]
+    superstep_sec = sum(m["wall_ms"] for m in steps) / 1000.0
+    edges.unpersist()
+    return {
+        "vertices": n,
+        "edges": real_edges,
+        "supersteps": len(steps),
+        "converged": res.converged,
+        "superstep_sec": superstep_sec,
+        "step_walls_sec": [round(m["wall_ms"] / 1000.0, 3) for m in steps],
+        "final_delta": steps[-1]["delta"] if steps else None,
+    }
+
+
 def run_at(cores: int, parts: int, vertices: int, edges: int) -> dict:
     code = _RUNNER.format(
-        repo=str(REPO), cores=cores, parts=parts, vertices=vertices,
-        edges=edges,
+        repo=str(REPO), scripts=str(REPO / "scripts"), cores=cores,
+        parts=parts, vertices=vertices, edges=edges,
     )
     proc = subprocess.run(
         [sys.executable, "-c", code],
