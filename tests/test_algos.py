@@ -386,7 +386,7 @@ def test_core_numbers_hindex_shapes(spark):
 
 
 # --------------------------------------------------- degree family + tergraph
-def test_degree_centrality(spark, reference):
+def test_degree_centrality(spark):
     edges = _rand_graph(seed=31, n=30, m=50)
     df = _edges_df(spark, edges)
     G = _nx_graph(edges)
