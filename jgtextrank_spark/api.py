@@ -8,7 +8,9 @@ Input contracts:
 * ``keywords_extraction``            — one raw text string (driver-side
   convenience; builds a 1-row pages DataFrame).
 * ``keywords_extraction_from_pages`` — pages DataFrame
-  ``(url, text, ...)`` — THE scale path.
+  ``(url, text, ...)`` — THE scale path. A page set small enough for
+  Spark to collect to the driver is extracted there, with no Python
+  worker.
 * ``keywords_extraction_from_segmented_corpus`` — pre-tokenized contexts
   ``(doc_id, ctx_id, tokens array<string>)``.
 * ``keywords_extraction_from_tagged_corpus`` — pre-tagged contexts
@@ -26,10 +28,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpus import build_sentences, sentences_from_tagged
+from .corpus import build_sentences, page_token_rows, sentences_from_tagged
 from .extract import DEFAULT_SYNTACTIC_CATEGORIES, rule_pos_tag
 from .graph import cooccurrence_edges, vertices_from_sentences
-from .textrank import keywords_from_sentences
+from .textrank import keywords_from_sentences, keywords_from_token_rows
 
 __all__ = [
     "keywords_extraction",
@@ -49,6 +51,23 @@ def keywords_extraction_from_pages(
     url_col: str = "url",
     **pipeline_kwargs,
 ) -> DataFrame:
+    """A page set that Spark would collect to the driver (its ``(url,
+    text)`` size estimate fits under ``spark.sql.autoBroadcastJoinThreshold``)
+    is extracted in the driver process (``corpus.page_token_rows``), and its
+    token rows go straight to the TextRank driver path. Larger page sets,
+    more than ``SMALL_GRAPH_LIMIT`` token rows, rows that path declines and
+    options it does not take run the extract UDF and
+    ``keywords_from_sentences``. Spark has no size estimate for a frame
+    built from a Python list, so such a frame takes the UDF path."""
+    local = keywords_from_token_rows(
+        pages.sparkSession,
+        lambda: page_token_rows(
+            pages, syntactic_categories, stop_words, text_col, url_col
+        ),
+        **pipeline_kwargs,
+    )
+    if local is not None:
+        return local
     sentences = build_sentences(
         pages,
         syntactic_categories=syntactic_categories,
@@ -64,7 +83,12 @@ def keywords_extraction(
     text: str,
     **kwargs,
 ) -> DataFrame:
-    pages = spark.createDataFrame([("text-0", text)], "url string, text string")
+    # from pandas, the frame is a local relation whose size Spark knows,
+    # so the text is extracted on the driver
+    pages = spark.createDataFrame(
+        pd.DataFrame({"url": ["text-0"], "text": [text]}),
+        "url string, text string",
+    )
     return keywords_extraction_from_pages(pages, **kwargs)
 
 

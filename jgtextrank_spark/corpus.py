@@ -7,8 +7,14 @@ DataFrame shapes shared by the whole engine:
   the tagged array, and the syntactically-filtered tagged array.
 * ``tokens``: position-exploded rows for windowing/collapse stages.
 
-All filtering happens JVM-side with higher-order array functions so Catalyst
-sees (and prunes/pushes) it; the only Python is the Arrow-batched extract UDF.
+On this path all filtering happens JVM-side with higher-order array
+functions so Catalyst sees (and prunes/pushes) it; the only Python is the
+Arrow-batched extract UDF.
+
+A page set small enough for Spark to collect to the driver skips that UDF:
+``page_token_rows`` fetches ``(url, text)`` in one Arrow job and runs the
+same ``extract.tag_text`` loop in the driver process, so no Python worker
+starts. Its rows feed the TextRank driver path directly.
 """
 
 from __future__ import annotations
@@ -16,12 +22,22 @@ from __future__ import annotations
 import string
 from typing import Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .extract import DEFAULT_SYNTACTIC_CATEGORIES, tagged_sentences_udf
+from .extract import (
+    DEFAULT_SYNTACTIC_CATEGORIES,
+    preprocess_text,
+    tagged_sentences_udf,
+)
 
-__all__ = ["build_sentences", "sentences_from_tagged", "explode_tokens"]
+__all__ = [
+    "build_sentences",
+    "sentences_from_tagged",
+    "explode_tokens",
+    "page_token_rows",
+]
 
 _PUNCT = string.punctuation
 
@@ -120,6 +136,62 @@ def build_sentences(
         ),
     )
     return sents
+
+
+def page_token_rows(
+    pages: DataFrame,
+    syntactic_categories: Iterable[str] = DEFAULT_SYNTACTIC_CATEGORIES,
+    stop_words: Iterable[str] | None = None,
+    text_col: str = "text",
+    url_col: str = "url",
+) -> pa.Table | None:
+    """The token rows ``(url, sent_id, pos, accepted, token)`` of
+    ``build_sentences(pages)``, extracted on the driver: per sentence its
+    stream tokens (``accepted`` false), then its filtered tokens
+    (``accepted`` true), numbered in that order by ``pos``. ``url`` keeps
+    its column type.
+
+    One Arrow job fetches ``(url, text)``. None, before any job, when
+    Spark's size estimate of that projection is above
+    ``spark.sql.autoBroadcastJoinThreshold`` (or the threshold is off),
+    and None once the rows pass ``SMALL_GRAPH_LIMIT``."""
+    from .algos import smallgraph
+
+    texts = pages.select(
+        F.col(url_col).alias("url"), F.col(text_col).alias("text")
+    )
+    threshold = (
+        pages.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    size = texts._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if threshold <= 0 or size > threshold:
+        return None
+    table = texts.toArrow()
+    page, sent_id, pos, accepted, token = [], [], [], [], []
+    for i, text in enumerate(table.column("text").to_pylist()):
+        for sid, (tokens, filtered) in enumerate(
+            preprocess_text(text, syntactic_categories, stop_words)
+        ):
+            row_tokens = tokens + [tok for tok, _ in filtered]
+            n = len(row_tokens)
+            page += [i] * n
+            sent_id += [sid] * n
+            pos.extend(range(n))
+            accepted += [False] * len(tokens) + [True] * len(filtered)
+            token += row_tokens
+        if len(token) > smallgraph.SMALL_GRAPH_LIMIT:
+            return None
+    return pa.table(
+        {
+            "url": table.column("url").take(pa.array(page, pa.int64())),
+            "sent_id": pa.array(sent_id, pa.int32()),
+            "pos": pa.array(pos, pa.int32()),
+            "accepted": pa.array(accepted, pa.bool_()),
+            "token": pa.array(token, pa.string()),
+        }
+    )
 
 
 def explode_tokens(sentences: DataFrame, col: str = "tokens") -> DataFrame:

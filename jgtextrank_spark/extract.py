@@ -43,6 +43,7 @@ __all__ = [
     "sent_tokenize",
     "word_tokenize",
     "rule_pos_tag",
+    "tag_text",
     "preprocess_text",
     "sentences_udf",
     "tagged_sentences_udf",
@@ -209,6 +210,31 @@ def token_passes_filters(
     return token not in string.punctuation
 
 
+def tag_text(
+    text: str | None, backend: str | None = None
+) -> list[list[tuple[str, str]]]:
+    """One document's tagged sentences: sentence split -> tokenize
+    (lowercased first for ``regex``) -> tag the raw tokens -> normalize each
+    token (``core.py:219-251``). Returns per sentence the
+    ``(normalized_token, tag)`` pairs; ``[]`` for a None text.
+
+    The one extraction loop: the UDFs and ``preprocess_text`` call it, and
+    the pages driver path (``corpus.page_token_rows``) through
+    ``preprocess_text``."""
+    if text is None:
+        return []
+    backend = backend or DEFAULT_BACKEND
+    sent_fn, word_fn = TOKENIZER_BACKENDS[backend]
+    tagger = TAGGER_BACKENDS["nltk" if backend == "nltk" else "rule"]
+    out = []
+    for sent in sent_fn(text):
+        # Reference lowercases at corpus-read time (utility.py:79-84) or via
+        # normalize(); tag first, then normalize each token.
+        tokens = word_fn(sent.lower()) if backend == "regex" else word_fn(sent)
+        out.append([(normalize_token(t), tag) for t, tag in tagger(tokens)])
+    return out
+
+
 def preprocess_text(
     text: str,
     syntactic_categories: Iterable[str] = DEFAULT_SYNTACTIC_CATEGORIES,
@@ -223,26 +249,19 @@ def preprocess_text(
     This is the driver-side golden path the distributed pipeline is
     asserted byte-identical against.
     """
-    backend = backend or DEFAULT_BACKEND
-    sent_fn, word_fn = TOKENIZER_BACKENDS[backend]
-    tagger = TAGGER_BACKENDS["nltk" if backend == "nltk" else "rule"]
     cats = set(syntactic_categories)
     stops = set(stop_words) if stop_words is not None else None
-    out = []
-    for sent in sent_fn(text):
-        tokens = word_fn(sent.lower()) if backend == "regex" else word_fn(sent)
-        # Reference lowercases at corpus-read time (utility.py:79-84) or via
-        # normalize(); tag first, then normalize each token (core.py:219-251).
-        tagged = tagger(tokens)
-        normed = [(normalize_token(tok), tag) for tok, tag in tagged]
-        norm_tokens = [tok for tok, _ in normed]
-        filtered = [
-            (tok, tag)
-            for tok, tag in normed
-            if token_passes_filters(tok, tag, cats, stops)
-        ]
-        out.append((norm_tokens, filtered))
-    return out
+    return [
+        (
+            [tok for tok, _ in tagged],
+            [
+                (tok, tag)
+                for tok, tag in tagged
+                if token_passes_filters(tok, tag, cats, stops)
+            ],
+        )
+        for tagged in tag_text(text, backend)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -376,58 +395,27 @@ def sentences_udf(backend: str | None = None):
     """pandas UDF: ``text -> array<array<string>>`` of per-sentence
     normalized tokens (reference ``segmentation.py:219-232`` +
     ``core.py:239-251``)."""
-    backend_name = backend or DEFAULT_BACKEND
+    backend = backend or DEFAULT_BACKEND
 
     @F.pandas_udf(_SENTENCES_SCHEMA)
     def _extract(texts: pd.Series) -> pd.Series:
-        sent_fn, word_fn = TOKENIZER_BACKENDS[backend_name]
-        result = []
-        for text in texts:
-            if text is None:
-                result.append([])
-                continue
-            sents = []
-            for sent in sent_fn(text):
-                toks = (
-                    word_fn(sent.lower())
-                    if backend_name == "regex"
-                    else word_fn(sent)
-                )
-                sents.append([normalize_token(t) for t in toks])
-            result.append(sents)
-        return pd.Series(result)
+        return pd.Series(
+            [
+                [[tok for tok, _ in sent] for sent in tag_text(text, backend)]
+                for text in texts
+            ]
+        )
 
     return _extract
 
 
 def tagged_sentences_udf(backend: str | None = None):
     """pandas UDF: ``text -> array<array<struct<token,tag>>>`` —
-    sentence split + tokenize + tag + normalize in one Arrow batch pass.
-    Tagging happens on the *raw* tokens, normalization after, exactly as
-    the reference (``core.py:229-251``)."""
-    backend_name = backend or DEFAULT_BACKEND
+    ``tag_text`` over one Arrow batch."""
+    backend = backend or DEFAULT_BACKEND
 
     @F.pandas_udf(_TAGGED_SCHEMA)
     def _extract(texts: pd.Series) -> pd.Series:
-        sent_fn, word_fn = TOKENIZER_BACKENDS[backend_name]
-        tagger = TAGGER_BACKENDS["nltk" if backend_name == "nltk" else "rule"]
-        result = []
-        for text in texts:
-            if text is None:
-                result.append([])
-                continue
-            sents = []
-            for sent in sent_fn(text):
-                toks = (
-                    word_fn(sent.lower())
-                    if backend_name == "regex"
-                    else word_fn(sent)
-                )
-                tagged = tagger(toks)
-                sents.append(
-                    [(normalize_token(tok), tag) for tok, tag in tagged]
-                )
-            result.append(sents)
-        return pd.Series(result)
+        return pd.Series([tag_text(text, backend) for text in texts])
 
     return _extract

@@ -13,38 +13,60 @@ defaults are the ones that matter at 100 TB:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
-__all__ = ["default_driver_memory", "get_spark", "ship_package"]
+__all__ = ["default_driver_memory", "get_spark", "package_zip", "ship_package"]
+
+
+def package_zip() -> str:
+    """Path of a zip of this package's sources, named after their hash, in
+    the temp dir; written only when missing, so checkouts that share a
+    temp dir never overwrite each other's zip. The ``--py-files`` file
+    of a ``spark-submit``."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    sources = sorted(
+        os.path.relpath(os.path.join(root, fname), pkg_dir)
+        for root, _dirs, files in os.walk(pkg_dir)
+        if "__pycache__" not in root
+        for fname in files
+        if fname.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel in sources:
+        digest.update(rel.encode() + b"\0")
+        with open(os.path.join(pkg_dir, rel), "rb") as fh:
+            digest.update(fh.read() + b"\0")
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"jgtextrank_spark-{digest.hexdigest()[:16]}.zip",
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel in sources:
+                zf.write(
+                    os.path.join(pkg_dir, rel),
+                    os.path.join("jgtextrank_spark", rel),
+                )
+        os.replace(tmp, zip_path)
+    return zip_path
 
 
 def ship_package(spark: SparkSession) -> str:
     """Ship this package to the executors' Python workers — the
-    ``spark-submit --py-files`` story, automated. Zips ``jgtextrank_spark``
-    and registers it with ``addPyFile`` so pandas-UDF closures that
-    reference the package resolve on every worker regardless of the
-    driver's cwd/sys.path."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), "jgtextrank_spark_pyfiles.zip"
-    )
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fname in files:
-                if not fname.endswith(".py"):
-                    continue
-                full = os.path.join(root, fname)
-                rel = os.path.join(
-                    "jgtextrank_spark", os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    ``spark-submit --py-files`` story, automated. Registers
+    ``package_zip()`` with ``addPyFile``, once per SparkContext, so
+    pandas-UDF closures that reference the package resolve on every
+    worker regardless of the driver's cwd/sys.path."""
+    zip_path = package_zip()
+    sc = spark.sparkContext
+    if os.path.basename(zip_path) not in sc._python_includes:
+        sc.addPyFile(zip_path)
     return zip_path
 
 

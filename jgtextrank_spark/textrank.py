@@ -42,19 +42,27 @@ islands within documents and distributes fully (the scalable mode).
   ``(url, sent_id, tokens, filtered)`` projection. The result is cached
   and the intermediate frames are released before the call returns.
 
-Both paths return the same rows.
+Both paths return the same rows. ``keywords_from_token_rows`` runs the
+driver path on token rows built elsewhere:
+``api.keywords_extraction_from_pages`` hands it the rows that
+``corpus.page_token_rows`` extracts in the driver process, so a small
+page set reaches TextRank without a Spark sentences frame or a Python
+worker.
 """
 
 from __future__ import annotations
 
+import inspect
 import math
+from typing import Callable
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .algos.smallgraph import fetch
 from .corpus import explode_tokens
 from .graph import cooccurrence_edges, symmetrize, vertices_from_sentences
 
@@ -64,6 +72,7 @@ __all__ = [
     "collapse_candidates",
     "weigh_candidates",
     "keywords_from_sentences",
+    "keywords_from_token_rows",
     "SOLVERS",
 ]
 
@@ -487,19 +496,12 @@ def keywords_from_sentences(
     frame over per-term rows held on the driver; the DataFrame path's
     result is cached, its intermediate frames are released, and
     ``unpersist()`` on the result frees the rest."""
-    if solver not in SOLVERS:
-        raise ValueError(f"Unsupported solver: {solver!r}")
-    if weighted:
-        raise ValueError(
-            "weighted=True is unsupported in the reference pipeline "
-            "(core.py:939-942); use cooccurrence_edges(weighted=True) for "
-            "the generalized engine."
-        )
-    if solver in _PAGERANK_SOLVERS and set(solver_kwargs) <= {"alpha"}:
+    if _runs_local(solver, weighted, solver_kwargs):
         local = _keywords_local(
-            sentences, window, top_p, top_t, conn_with_original_ctx,
-            max_iter, tol, solver_kwargs.get("alpha", 0.85), weight_comb,
-            mu, per_doc_collapse,
+            sentences.sparkSession, fetch(_token_rows(sentences)), window,
+            top_p, top_t, conn_with_original_ctx, max_iter, tol,
+            solver_kwargs.get("alpha", 0.85), weight_comb, mu,
+            per_doc_collapse,
         )
         if local is not None:
             return local
@@ -539,6 +541,46 @@ def keywords_from_sentences(
     return out
 
 
+def keywords_from_token_rows(
+    spark: SparkSession,
+    token_rows: Callable[[], pa.Table | None],
+    **pipeline_kwargs,
+) -> DataFrame | None:
+    """``keywords_from_sentences(sentences, **pipeline_kwargs)`` on the
+    driver path, with the rows of ``_token_rows(sentences)`` given by
+    ``token_rows()`` in place of a fetch. Raises where
+    ``keywords_from_sentences`` raises, before ``token_rows`` runs. None
+    when the options or the rows need the DataFrame path: then the
+    caller runs ``keywords_from_sentences``."""
+    args = inspect.signature(keywords_from_sentences).bind(
+        None, **pipeline_kwargs
+    )
+    args.apply_defaults()
+    opt = args.arguments
+    if not _runs_local(opt["solver"], opt["weighted"], opt["solver_kwargs"]):
+        return None
+    return _keywords_local(
+        spark, token_rows(), opt["window"], opt["top_p"], opt["top_t"],
+        opt["conn_with_original_ctx"], opt["max_iter"], opt["tol"],
+        opt["solver_kwargs"].get("alpha", 0.85), opt["weight_comb"],
+        opt["mu"], opt["per_doc_collapse"],
+    )
+
+
+def _runs_local(solver, weighted, solver_kwargs) -> bool:
+    """Whether the options suit the driver path; raises on options that
+    no path takes."""
+    if solver not in SOLVERS:
+        raise ValueError(f"Unsupported solver: {solver!r}")
+    if weighted:
+        raise ValueError(
+            "weighted=True is unsupported in the reference pipeline "
+            "(core.py:939-942); use cooccurrence_edges(weighted=True) for "
+            "the generalized engine."
+        )
+    return solver in _PAGERANK_SOLVERS and set(solver_kwargs) <= {"alpha"}
+
+
 def _token_rows(sentences: DataFrame) -> DataFrame:
     """One row per token occurrence ``(url, sent_id, pos, accepted,
     token)``: a sentence's stream tokens (``accepted`` false), then its
@@ -563,18 +605,17 @@ def _token_rows(sentences: DataFrame) -> DataFrame:
 
 
 def _keywords_local(
-    sentences, window, top_p, top_t, conn_with_original_ctx, max_iter, tol,
-    alpha, weight_comb, mu, per_doc,
+    spark, table, window, top_p, top_t, conn_with_original_ctx, max_iter,
+    tol, alpha, weight_comb, mu, per_doc,
 ) -> DataFrame | None:
-    """The pipeline in numpy on the driver, after one Arrow fetch of the
-    token rows; Spark only applies the weight formula and the final order
-    to one row per term. None when the corpus has more than
-    ``SMALL_GRAPH_LIMIT`` token rows, a null url, sent_id or token, or two
-    sentence rows with the same ``(url, sent_id)``."""
+    """The pipeline in numpy on the driver, from a token-rows table
+    ``(url, sent_id, pos, accepted, token)``; Spark only applies the weight
+    formula and the final order to one row per term. None when ``table``
+    is None (more than ``SMALL_GRAPH_LIMIT`` rows), or has a null url,
+    sent_id or token, or two sentences with the same ``(url, sent_id)``."""
     from .algos.pagerank import pagerank_local_scores
-    from .algos.smallgraph import fetch, sorted_codes
+    from .algos.smallgraph import sorted_codes
 
-    table = fetch(_token_rows(sentences))
     if table is None or any(
         table.column(c).null_count for c in ("url", "sent_id", "token")
     ):
@@ -656,7 +697,6 @@ def _keywords_local(
     )
     terms = pc.binary_join(term_tokens, " ")
 
-    spark = sentences.sparkSession
     if weight_comb == "gcvalue":
         out = _gcvalue(
             spark.createDataFrame(

@@ -1,10 +1,11 @@
 r"""spark-submit entry point for the link-graph suite (north rule: "ships
 as a spark-submit --py-files job").
 
-    # package once (or let the job auto-ship itself via addPyFile):
-    python -c "import zipfile,os;..."   # or scripts below
+    # zip the package (or let the job ship itself via addPyFile); the zip
+    # is $TMPDIR/jgtextrank_spark-<hash of the sources>.zip
+    ZIP=$(python -c "import jgtextrank_spark.session as s; print(s.package_zip())")
     spark-submit --master <cluster> \
-        --py-files /tmp/jgtextrank_spark_pyfiles.zip \
+        --py-files "$ZIP" \
         jobs/linkgraph_job.py \
         --pages  s3://bucket/crawl/pages/          \  # (url, warc_ts, html, text, lang)
         --output s3://bucket/out/pagerank/          \
@@ -257,7 +258,7 @@ def _get_session():
 
     if SparkConf().contains("spark.master"):
         spark = SparkSession.builder.getOrCreate()
-        ship_package(spark)  # harmless no-op overlap with --py-files
+        ship_package(spark)  # a no-op when --py-files shipped the same zip
         return spark
     return get_spark(master=os.environ.get("SPARK_MASTER"))
 
