@@ -9,8 +9,8 @@ Input contracts:
   convenience; builds a 1-row pages DataFrame).
 * ``keywords_extraction_from_pages`` — pages DataFrame
   ``(url, text, ...)`` — THE scale path. A page set small enough for
-  Spark to collect to the driver is extracted there, with no Python
-  worker.
+  Spark to collect to the driver, with no more words than the TextRank
+  driver path takes, is extracted there, with no Python worker.
 * ``keywords_extraction_from_segmented_corpus`` — pre-tokenized contexts
   ``(doc_id, ctx_id, tokens array<string>)``.
 * ``keywords_extraction_from_tagged_corpus`` — pre-tagged contexts
@@ -53,29 +53,27 @@ def keywords_extraction_from_pages(
 ) -> DataFrame:
     """A page set that Spark would collect to the driver (its ``(url,
     text)`` size estimate fits under ``spark.sql.autoBroadcastJoinThreshold``)
-    is extracted in the driver process (``corpus.page_token_rows``), and its
-    token rows go straight to the TextRank driver path. Larger page sets,
-    more than ``SMALL_GRAPH_LIMIT`` token rows, rows that path declines and
-    options it does not take run the extract UDF and
-    ``keywords_from_sentences``. Spark has no size estimate for a frame
-    built from a Python list, so such a frame takes the UDF path."""
-    local = keywords_from_token_rows(
+    and whose word count does not pass ``SMALL_GRAPH_LIMIT`` is extracted in
+    the driver process (``corpus.page_token_rows``), and its token rows go
+    straight to the TextRank driver path. Larger page sets, more than
+    ``SMALL_GRAPH_LIMIT`` token rows, rows that path declines and options
+    it does not take run the extract UDF and the DataFrame path. Spark has
+    no size estimate for a frame built from a Python list, so such a frame
+    takes the UDF path."""
+    return keywords_from_token_rows(
         pages.sparkSession,
         lambda: page_token_rows(
             pages, syntactic_categories, stop_words, text_col, url_col
         ),
+        lambda: build_sentences(
+            pages,
+            syntactic_categories=syntactic_categories,
+            stop_words=stop_words,
+            text_col=text_col,
+            url_col=url_col,
+        ),
         **pipeline_kwargs,
     )
-    if local is not None:
-        return local
-    sentences = build_sentences(
-        pages,
-        syntactic_categories=syntactic_categories,
-        stop_words=stop_words,
-        text_col=text_col,
-        url_col=url_col,
-    )
-    return keywords_from_sentences(sentences, **pipeline_kwargs)
 
 
 def keywords_extraction(

@@ -7,14 +7,16 @@ DataFrame shapes shared by the whole engine:
   the tagged array, and the syntactically-filtered tagged array.
 * ``tokens``: position-exploded rows for windowing/collapse stages.
 
-On this path all filtering happens JVM-side with higher-order array
-functions so Catalyst sees (and prunes/pushes) it; the only Python is the
-Arrow-batched extract UDF.
+On the ``build_sentences`` path all filtering happens JVM-side with
+higher-order array functions so Catalyst sees (and prunes/pushes) it; the
+only Python is the Arrow-batched extract UDF.
 
-A page set small enough for Spark to collect to the driver skips that UDF:
+A page set small enough for Spark to collect to the driver, with no more
+words than the TextRank driver path can take, skips that UDF:
 ``page_token_rows`` fetches ``(url, text)`` in one Arrow job and runs the
-same ``extract.tag_text`` loop in the driver process, so no Python worker
-starts. Its rows feed the TextRank driver path directly.
+same ``extract.tag_text`` loop (through ``preprocess_text``) in the driver
+process, so no Python worker starts. Its rows feed the TextRank driver
+path directly.
 """
 
 from __future__ import annotations
@@ -145,17 +147,25 @@ def page_token_rows(
     text_col: str = "text",
     url_col: str = "url",
 ) -> pa.Table | None:
-    """The token rows ``(url, sent_id, pos, accepted, token)`` of
-    ``build_sentences(pages)``, extracted on the driver: per sentence its
-    stream tokens (``accepted`` false), then its filtered tokens
-    (``accepted`` true), numbered in that order by ``pos``. ``url`` keeps
-    its column type.
+    """The token rows of ``build_sentences(pages)``, extracted on the
+    driver (``textrank._token_rows_local`` over ``preprocess_text``), or
+    None when the page set is too large for that. Two checks run before
+    any text is fetched:
 
-    One Arrow job fetches ``(url, text)``. None, before any job, when
-    Spark's size estimate of that projection is above
-    ``spark.sql.autoBroadcastJoinThreshold`` (or the threshold is off),
-    and None once the rows pass ``SMALL_GRAPH_LIMIT``."""
+    * Spark's size estimate of the ``(url, text)`` projection must fit
+      under ``spark.sql.autoBroadcastJoinThreshold`` (above 0), the size
+      at which Spark itself collects a relation to the driver. No job.
+    * Its whitespace-separated words, counted by one JVM aggregation job,
+      must not pass ``SMALL_GRAPH_LIMIT``. A word of ASCII letters, digits
+      or punctuation yields at least one stream token, hence one token row,
+      so a page set with more words would not fit the TextRank driver path
+      after extraction either. This bounds the text the fetch brings to the
+      driver by what that limit can use.
+
+    Then one Arrow job fetches ``(url, text)``, and extraction stops at
+    the first page whose rows take the total past ``SMALL_GRAPH_LIMIT``."""
     from .algos import smallgraph
+    from .textrank import _token_rows_local
 
     texts = pages.select(
         F.col(url_col).alias("url"), F.col(text_col).alias("text")
@@ -168,29 +178,16 @@ def page_token_rows(
     size = texts._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if threshold <= 0 or size > threshold:
         return None
+    words = texts.agg(F.sum(F.regexp_count("text", F.lit(r"\S+")))).first()
+    if (words[0] or 0) > smallgraph.SMALL_GRAPH_LIMIT:
+        return None
     table = texts.toArrow()
-    page, sent_id, pos, accepted, token = [], [], [], [], []
-    for i, text in enumerate(table.column("text").to_pylist()):
-        for sid, (tokens, filtered) in enumerate(
+    return _token_rows_local(
+        table.column("url"),
+        (
             preprocess_text(text, syntactic_categories, stop_words)
-        ):
-            row_tokens = tokens + [tok for tok, _ in filtered]
-            n = len(row_tokens)
-            page += [i] * n
-            sent_id += [sid] * n
-            pos.extend(range(n))
-            accepted += [False] * len(tokens) + [True] * len(filtered)
-            token += row_tokens
-        if len(token) > smallgraph.SMALL_GRAPH_LIMIT:
-            return None
-    return pa.table(
-        {
-            "url": table.column("url").take(pa.array(page, pa.int64())),
-            "sent_id": pa.array(sent_id, pa.int32()),
-            "pos": pa.array(pos, pa.int32()),
-            "accepted": pa.array(accepted, pa.bool_()),
-            "token": pa.array(token, pa.string()),
-        }
+            for text in table.column("text").to_pylist()
+        ),
     )
 
 

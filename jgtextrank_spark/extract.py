@@ -45,7 +45,6 @@ __all__ = [
     "rule_pos_tag",
     "tag_text",
     "preprocess_text",
-    "sentences_udf",
     "tagged_sentences_udf",
     "DEFAULT_SYNTACTIC_CATEGORIES",
     "token_passes_filters",
@@ -218,9 +217,9 @@ def tag_text(
     token (``core.py:219-251``). Returns per sentence the
     ``(normalized_token, tag)`` pairs; ``[]`` for a None text.
 
-    The one extraction loop: the UDFs and ``preprocess_text`` call it, and
-    the pages driver path (``corpus.page_token_rows``) through
-    ``preprocess_text``."""
+    The one extraction loop: ``tagged_sentences_udf`` and
+    ``preprocess_text`` call it, and the pages driver path
+    (``corpus.page_token_rows``) through ``preprocess_text``."""
     if text is None:
         return []
     backend = backend or DEFAULT_BACKEND
@@ -378,7 +377,6 @@ def stem(word: str) -> str:
 # Spark-side vectorized wrappers (Arrow-batched; one Python call per batch).
 # ---------------------------------------------------------------------------
 
-_SENTENCES_SCHEMA = ArrayType(ArrayType(StringType()))
 _TAGGED_SCHEMA = ArrayType(
     ArrayType(
         StructType(
@@ -389,24 +387,6 @@ _TAGGED_SCHEMA = ArrayType(
         )
     )
 )
-
-
-def sentences_udf(backend: str | None = None):
-    """pandas UDF: ``text -> array<array<string>>`` of per-sentence
-    normalized tokens (reference ``segmentation.py:219-232`` +
-    ``core.py:239-251``)."""
-    backend = backend or DEFAULT_BACKEND
-
-    @F.pandas_udf(_SENTENCES_SCHEMA)
-    def _extract(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                [[tok for tok, _ in sent] for sent in tag_text(text, backend)]
-                for text in texts
-            ]
-        )
-
-    return _extract
 
 
 def tagged_sentences_udf(backend: str | None = None):

@@ -25,36 +25,34 @@ Collapse parity mode uses one global ordering window (fine per document /
 small corpora — exactly the reference's regime); ``per_doc=True`` keeps
 islands within documents and distributes fully (the scalable mode).
 
-``keywords_from_sentences`` runs the pipeline one of two ways.
+``keywords_from_token_rows`` runs the pipeline one of two ways.
 
 * **Driver path** (corpora of at most ``SMALL_GRAPH_LIMIT`` = 200 000
   token rows, counting each stream token and each filtered token once,
-  with the PageRank solvers): one Spark job fetches the token rows with
-  ``limit(...).toArrow()``, which stops early on a larger corpus. The
-  co-occurrence edges, PageRank (the local solve's recurrence), top-T,
-  collapse and per-term aggregates then run in numpy, with words coded in
-  Spark's sort order so ties break as on the DataFrame path. Spark applies
-  the weight formula, its rounding and the final order to one row per
-  term; ``gcvalue`` runs ``_gcvalue`` over candidate frames built from
-  Arrow.
+  with the PageRank solvers): the token rows come to the driver as one
+  Arrow table. ``keywords_from_sentences`` fetches them from its frame
+  with one ``limit(...).toArrow()`` job, which stops early on a larger
+  corpus; ``api.keywords_extraction_from_pages`` builds them in the
+  driver process (``_token_rows_local`` over ``corpus.page_token_rows``'
+  extraction), so a small page set reaches TextRank without a sentences
+  frame or a Python worker. The co-occurrence edges, PageRank (the local
+  solve's recurrence), top-T, collapse and per-term aggregates then run
+  in numpy, with words coded in Spark's sort order so ties break as on
+  the DataFrame path. Spark applies the weight formula, its rounding and
+  the final order to one row per term; ``gcvalue`` runs ``_gcvalue`` over
+  candidate frames built from Arrow.
 * **DataFrame path** (larger corpora, other solvers, a null ``url``,
-  ``sent_id`` or token): the stage functions below over one persisted
+  ``sent_id`` or token, a repeated ``(url, sent_id)``): the stage functions below over one persisted
   ``(url, sent_id, tokens, filtered)`` projection. The result is cached
   and the intermediate frames are released before the call returns.
 
-Both paths return the same rows. ``keywords_from_token_rows`` runs the
-driver path on token rows built elsewhere:
-``api.keywords_extraction_from_pages`` hands it the rows that
-``corpus.page_token_rows`` extracts in the driver process, so a small
-page set reaches TextRank without a Spark sentences frame or a Python
-worker.
+Both paths return the same rows.
 """
 
 from __future__ import annotations
 
-import inspect
 import math
-from typing import Callable
+from typing import Callable, Iterable
 
 import numpy as np
 import pyarrow as pa
@@ -62,6 +60,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .algos import smallgraph
 from .algos.smallgraph import fetch
 from .corpus import explode_tokens
 from .graph import cooccurrence_edges, symmetrize, vertices_from_sentences
@@ -472,7 +471,23 @@ def _gcvalue(
 
 
 def keywords_from_sentences(
-    sentences: DataFrame,
+    sentences: DataFrame, **pipeline_kwargs
+) -> DataFrame:
+    """``keywords_from_token_rows`` over a sentences frame: the driver path
+    fetches the frame's token rows (``_token_rows``) in one limited Arrow
+    job."""
+    return keywords_from_token_rows(
+        sentences.sparkSession,
+        lambda: fetch(_token_rows(sentences)),
+        lambda: sentences,
+        **pipeline_kwargs,
+    )
+
+
+def keywords_from_token_rows(
+    spark: SparkSession,
+    token_rows: Callable[[], pa.Table | None],
+    sentences: Callable[[], DataFrame],
     window: int = 2,
     top_p: float = 0.3,
     top_t: int | None = None,
@@ -492,14 +507,20 @@ def keywords_from_sentences(
     sentences -> co-occurrence graph -> solver -> top-T -> collapse ->
     weigh. Returns (term, score) ordered by score desc, term asc.
 
+    One corpus, two sources, each called only when its path runs:
+    ``token_rows()`` gives the corpus' token rows ``(url, sent_id, pos,
+    accepted, token)`` for the driver path, or None when there are more
+    than ``SMALL_GRAPH_LIMIT``; ``sentences()`` gives its sentences frame
+    for the DataFrame path. Invalid options raise before either is called.
+
     The pipeline has run when this returns. The driver path's result is a
     frame over per-term rows held on the driver; the DataFrame path's
     result is cached, its intermediate frames are released, and
     ``unpersist()`` on the result frees the rest."""
     if _runs_local(solver, weighted, solver_kwargs):
         local = _keywords_local(
-            sentences.sparkSession, fetch(_token_rows(sentences)), window,
-            top_p, top_t, conn_with_original_ctx, max_iter, tol,
+            spark, token_rows(), window, top_p, top_t,
+            conn_with_original_ctx, max_iter, tol,
             solver_kwargs.get("alpha", 0.85), weight_comb, mu,
             per_doc_collapse,
         )
@@ -507,7 +528,7 @@ def keywords_from_sentences(
             return local
 
     # one extraction: every branch below reads this narrow projection
-    narrow = sentences.select(
+    narrow = sentences().select(
         "url",
         "sent_id",
         "tokens",
@@ -539,32 +560,6 @@ def keywords_from_sentences(
     for df in (narrow, edges, vertices, scores, top, cands):
         df.unpersist()
     return out
-
-
-def keywords_from_token_rows(
-    spark: SparkSession,
-    token_rows: Callable[[], pa.Table | None],
-    **pipeline_kwargs,
-) -> DataFrame | None:
-    """``keywords_from_sentences(sentences, **pipeline_kwargs)`` on the
-    driver path, with the rows of ``_token_rows(sentences)`` given by
-    ``token_rows()`` in place of a fetch. Raises where
-    ``keywords_from_sentences`` raises, before ``token_rows`` runs. None
-    when the options or the rows need the DataFrame path: then the
-    caller runs ``keywords_from_sentences``."""
-    args = inspect.signature(keywords_from_sentences).bind(
-        None, **pipeline_kwargs
-    )
-    args.apply_defaults()
-    opt = args.arguments
-    if not _runs_local(opt["solver"], opt["weighted"], opt["solver_kwargs"]):
-        return None
-    return _keywords_local(
-        spark, token_rows(), opt["window"], opt["top_p"], opt["top_t"],
-        opt["conn_with_original_ctx"], opt["max_iter"], opt["tol"],
-        opt["solver_kwargs"].get("alpha", 0.85), opt["weight_comb"],
-        opt["mu"], opt["per_doc_collapse"],
-    )
 
 
 def _runs_local(solver, weighted, solver_kwargs) -> bool:
@@ -602,6 +597,37 @@ def _token_rows(sentences: DataFrame) -> DataFrame:
     return sentences.select(
         "url", "sent_id", F.posexplode(both).alias("pos", "t")
     ).select("url", "sent_id", "pos", "t.accepted", "t.token")
+
+
+def _token_rows_local(
+    urls: pa.ChunkedArray,
+    pages: Iterable[list[tuple[list[str], list[tuple[str, str]]]]],
+) -> pa.Table | None:
+    """``_token_rows`` built on the driver: page ``i`` has url ``urls[i]``
+    and the ``extract.preprocess_text`` sentences that ``pages`` yields
+    i-th. ``url`` keeps its type. None at the first page whose rows take
+    the total past ``SMALL_GRAPH_LIMIT``; later pages are not read."""
+    page, sent_id, pos, accepted, token = [], [], [], [], []
+    for i, sents in enumerate(pages):
+        for sid, (tokens, filtered) in enumerate(sents):
+            row_tokens = tokens + [tok for tok, _ in filtered]
+            n = len(row_tokens)
+            page += [i] * n
+            sent_id += [sid] * n
+            pos.extend(range(n))
+            accepted += [False] * len(tokens) + [True] * len(filtered)
+            token += row_tokens
+        if len(token) > smallgraph.SMALL_GRAPH_LIMIT:
+            return None
+    return pa.table(
+        {
+            "url": urls.take(pa.array(page, pa.int64())),
+            "sent_id": pa.array(sent_id, pa.int32()),
+            "pos": pa.array(pos, pa.int32()),
+            "accepted": pa.array(accepted, pa.bool_()),
+            "token": pa.array(token, pa.string()),
+        }
+    )
 
 
 def _keywords_local(

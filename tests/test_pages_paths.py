@@ -1,8 +1,9 @@
 """``keywords_extraction_from_pages``' two extraction paths. A page set
-whose size estimate fits under ``spark.sql.autoBroadcastJoinThreshold`` is
-extracted on the driver and its token rows go straight to the TextRank
-driver path; otherwise the extract UDF builds a sentences frame. Both must
-return the same ``(term, score)`` rows in the same order."""
+whose size estimate fits under ``spark.sql.autoBroadcastJoinThreshold``,
+and whose word count does not pass ``SMALL_GRAPH_LIMIT``, is extracted on
+the driver and its token rows go straight to the TextRank driver path;
+otherwise the extract UDF builds a sentences frame. Both must return the
+same ``(term, score)`` rows in the same order."""
 
 from __future__ import annotations
 
@@ -165,12 +166,8 @@ def test_estimate_unknown_falls_back(spark):
     assert corpus.page_token_rows(frame) is None
 
 
-def test_rows_over_limit_stop_extraction(spark, pages, monkeypatch):
-    """Extraction stops at the first page whose rows cross the limit; the
-    UDF path then gives today's answer."""
-    frame = pages["default"]
-    urls = corpus.page_token_rows(frame).column("url").to_pylist()
-    first = urls.count("u1")
+def _preprocess_calls(monkeypatch):
+    """The texts the driver extraction reads, in order."""
     texts = []
     real = corpus.preprocess_text
 
@@ -179,9 +176,49 @@ def test_rows_over_limit_stop_extraction(spark, pages, monkeypatch):
         return real(text, *args, **kwargs)
 
     monkeypatch.setattr(corpus, "preprocess_text", counting)
+    return texts
+
+
+def _words(frame):
+    """The page set's whitespace-separated words."""
+    texts = [row["text"] for row in frame.select("text").collect()]
+    return sum(len(text.split()) for text in texts if text)
+
+
+def test_rows_over_limit_stop_extraction(spark, pages, monkeypatch):
+    """Extraction stops at the first page whose rows cross the limit; the
+    UDF path then gives today's answer."""
+    frame = pages["default"]
+    urls = corpus.page_token_rows(frame).column("url").to_pylist()
+    first = urls.count("u1")
+    # the word count passes, the first page's rows do not
+    assert _words(frame) <= first - 1
+    texts = _preprocess_calls(monkeypatch)
     monkeypatch.setattr(smallgraph, "SMALL_GRAPH_LIMIT", first - 1)
     assert corpus.page_token_rows(frame) is None
     assert len(texts) == 1
+    calls = _udf_calls(monkeypatch)
+    got = _keywords(frame, weight_comb="sum")
+    assert calls
+    assert got == _udf_path(spark, frame, weight_comb="sum")
+
+
+def test_words_over_limit_fetch_no_text(spark, pages, monkeypatch):
+    """A page set with more words than the limit is not fetched or
+    extracted on the driver: one aggregation job decides, and the UDF
+    path gives today's answer."""
+    frame = pages["default"]
+    monkeypatch.setattr(smallgraph, "SMALL_GRAPH_LIMIT", _words(frame) - 1)
+    texts = _preprocess_calls(monkeypatch)
+    sc = spark.sparkContext
+    group = "pages-words-over-limit"
+    sc.setJobGroup(group, group)
+    try:
+        assert corpus.page_token_rows(frame) is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert texts == []
     calls = _udf_calls(monkeypatch)
     got = _keywords(frame, weight_comb="sum")
     assert calls
