@@ -155,7 +155,7 @@ def page_token_rows(
     * Spark's size estimate of the ``(url, text)`` projection must fit
       under ``spark.sql.autoBroadcastJoinThreshold`` (above 0), the size
       at which Spark itself collects a relation to the driver. No job.
-    * Its whitespace-separated words, counted by one JVM aggregation job,
+    * Its whitespace-separated words, counted by one JVM aggregation,
       must not pass ``SMALL_GRAPH_LIMIT``. A word of ASCII letters, digits
       or punctuation yields at least one stream token, hence one token row,
       so a page set with more words would not fit the TextRank driver path
