@@ -11,9 +11,11 @@
                      unrolled MATERIALIZED CTE chains / recursive CTEs;
                      SimHash as a bit-exact md5 replay; ANN-LSH as
                      deterministic sign-bucket probes), and committed
-                     goldens for the two data-dependent loops (coreness:
-                     verified vs networkx; textrank: verified vs the real
-                     reference) — see scripts/make_goldens.py.
+                     goldens where the result is a data-dependent loop:
+                     coreness, Borůvka MSF and Brandes betweenness
+                     (verified vs networkx) and the two textrank rows
+                     (verified vs the real reference) — see
+                     scripts/make_goldens.py.
 """
 
 from __future__ import annotations
@@ -2153,11 +2155,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # --- driver gate window: the CORRECTNESS harness checks the
-        # FIRST 50 entries. Round 5 rotates the 40 operators that had
-        # never received a driver check (added r3/r4 past the window)
-        # to the front, plus new r5 rows, plus sentinel rows that have
-        # been gate-green since r1/r2 for cross-round continuity.
+        # --- gate window: the correctness harness checks the
+        # first 50 entries (check_oracles replays all of them)
         "bfs_depth": q_bfs_depth,
         "sssp_pages": q_sssp_pages,
         "redirect_resolution": q_redirect_resolution,
@@ -2206,8 +2205,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "louvain": q_louvain,
         "louvain_multilevel": q_louvain_multilevel,
         "leiden": q_leiden,
-        # top_tokens/prf_eval were last driver-checked in r3 under a
-        # different window: rotate them back in (VERDICT r4 item 10)
         "top_tokens": q_top_tokens,
         "prf_eval": q_prf_eval,
         # --- below here is outside the driver's 50-row window (all

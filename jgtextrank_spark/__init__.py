@@ -9,8 +9,9 @@ Layers:
     algos              pagerank, components, labelprop, triangles,
                        centrality family (degree, k-core, HITS, ...)
     textrank           top-T -> collapse -> MWT weighting -> keywords
-    functions          training-data-pipeline ops: dedup, similarity,
-                       text stats, multimodal plumbing
+    functions          dedup and text stats (streaming, the job); the
+                       other training-data-pipeline ops are reached by
+                       no entry point (tests/test_reachability.py)
 """
 
 from .session import get_spark  # noqa: F401

@@ -1,1 +1,1 @@
-from . import dedup, similarity, textstats  # noqa: F401
+from . import dedup, textstats  # noqa: F401

@@ -1,11 +1,17 @@
-"""Generate the committed correctness goldens for the two gate queries
-whose semantics are data-dependent loops (not ANSI-SQL-expressible):
+"""Generate the committed correctness goldens for the gate queries whose
+semantics are data-dependent loops (not ANSI-SQL-expressible):
 
 * ``coreness``          — verified at generation time against
                           ``networkx.core_number`` (exact).
-* ``textrank_keywords`` — verified at generation time against the REAL
-                          reference (``keywords_extraction_from_tagged_
-                          corpus``) run on the identical tagged stream.
+* ``msf_forest``        — verified against
+                          ``networkx.minimum_spanning_edges`` (exact edge
+                          set on md5-perturbed, hence distinct, weights).
+* ``betweenness_pages`` — verified against
+                          ``networkx.betweenness_centrality`` to 1e-9.
+* ``textrank_keywords`` and ``textrank_gcvalue`` — verified at generation
+                          time against the REAL reference
+                          (``keywords_extraction_from_tagged_corpus``) run
+                          on the identical tagged stream.
 
 The textrank check is exact, not approximate, via a sentinel trick: the
 gate runs with ``per_doc_collapse=True`` (runs bounded by documents, no
@@ -26,9 +32,10 @@ document makes the two semantics coincide exactly:
 ``top_p=1.0`` (the gate setting) removes the reference's only other
 nondeterminism — Python-hash-ordered ties at the top-T boundary.
 
-Usage: python scripts/make_goldens.py [sf_dir]   (default sf0.01)
-Writes goldens/{coreness,textrank}_<sf>.parquet and refuses to write on
-any verification mismatch.
+Usage: python scripts/make_goldens.py [sf_dir] [name ...]   (default
+sf0.01; names: coreness textrank gcvalue msf betweenness, default all).
+Writes goldens/{coreness,textrank,textrank_gcvalue,msf,betweenness}_<sf>
+.parquet and refuses to write on any verification mismatch.
 """
 
 from __future__ import annotations

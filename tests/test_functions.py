@@ -190,7 +190,7 @@ def test_ivf_topk_recall(spark):
 def test_ivf_kmeans_refinement_recall(spark):
     """Lloyd refinement (kmeans_iters>0): still deterministic, still
     recovers the planted near-dup, and recall@k vs the exact oracle does
-    not drop below the seeded-sample index (measured, per VERDICT r2)."""
+    not drop below the seeded-sample index (measured)."""
     from jgtextrank_spark.functions.similarity import ivf_topk
 
     emb, _ = _mkemb(spark, n=60)

@@ -1,7 +1,7 @@
-"""Golden-staleness guard (VERDICT r2 #8): regenerate the committed gate
-goldens in a tmp dir — with make_goldens' own verification against
-networkx / the REAL reference — and assert byte-level value equality with
-the committed parquet. A golden that drifts from the current engine or
+"""Golden-staleness guard: regenerate the committed gate goldens in a tmp
+dir — with make_goldens' own verification against networkx / the REAL
+reference — and assert byte-level value equality with the committed
+parquet. A golden that drifts from the current engine or
 testdata can never silently pass the gate again: this test fails first."""
 
 from __future__ import annotations
