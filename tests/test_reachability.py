@@ -106,7 +106,7 @@ def _imported(path: Path, modules: dict[str, Path]) -> set[str]:
     return reached
 
 
-def reachable() -> set[str]:
+def _reachable() -> set[str]:
     modules = _package_modules()
     seen: set[str] = set()
     todo = ROOT_MODULES + [
@@ -122,7 +122,7 @@ def reachable() -> set[str]:
 
 
 def test_every_package_module_is_reached():
-    unreached = set(_package_modules()) - reachable() - UNREACHED_KEPT
+    unreached = set(_package_modules()) - _reachable() - UNREACHED_KEPT
     assert not unreached, (
         f"modules no entry point imports: {sorted(unreached)}"
     )
@@ -132,7 +132,7 @@ def test_unreached_list_only_shrinks():
     modules = _package_modules()
     gone = UNREACHED_KEPT - set(modules)
     assert not gone, f"deleted, drop from UNREACHED_KEPT: {sorted(gone)}"
-    reached = UNREACHED_KEPT & reachable()
+    reached = UNREACHED_KEPT & _reachable()
     assert not reached, (
         f"now reached, drop from UNREACHED_KEPT: {sorted(reached)}"
     )
