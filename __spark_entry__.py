@@ -20,6 +20,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -3919,6 +3920,10 @@ WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}"""
 
 
 def oracle_sql() -> dict[str, str]:
+    # the goldens of this checkout, wherever it lives
+    goldens = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "goldens"
+    )
     fp_norm = (
         "md5(trim(regexp_replace(regexp_replace(lower(text), "
         "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')))"
@@ -4006,23 +4011,23 @@ LEFT JOIN tc ON tc.vertex = av.vertex""",
         # The correctness gate runs at sf=0.01, which these pin.
         "coreness": (
             "SELECT vertex, core FROM "
-            "read_parquet('/root/repo/goldens/coreness_sf0.01.parquet')"
+            f"read_parquet('{goldens}/coreness_sf0.01.parquet')"
         ),
         "textrank_keywords": (
             "SELECT term, score FROM "
-            "read_parquet('/root/repo/goldens/textrank_sf0.01.parquet')"
+            f"read_parquet('{goldens}/textrank_sf0.01.parquet')"
         ),
         "textrank_gcvalue": (
             "SELECT term, score FROM "
-            "read_parquet('/root/repo/goldens/textrank_gcvalue_sf0.01.parquet')"
+            f"read_parquet('{goldens}/textrank_gcvalue_sf0.01.parquet')"
         ),
         "msf_forest": (
             "SELECT u, v, weight FROM "
-            "read_parquet('/root/repo/goldens/msf_sf0.01.parquet')"
+            f"read_parquet('{goldens}/msf_sf0.01.parquet')"
         ),
         "betweenness_pages": (
             "SELECT vertex, betweenness FROM "
-            "read_parquet('/root/repo/goldens/betweenness_sf0.01.parquet')"
+            f"read_parquet('{goldens}/betweenness_sf0.01.parquet')"
         ),
         "components_per_doc": f"""
 WITH RECURSIVE {_TOK},

@@ -45,8 +45,8 @@ __all__ = [
 
 
 def materialize_input(edges: DataFrame, *cols: str):
-    """Project ``edges`` to ``cols`` and persist+materialize the
-    projection — UNLESS the input DataFrame is itself already cached.
+    """Project ``edges`` to ``cols`` and persist the projection — UNLESS
+    the input DataFrame is itself already cached.
 
     The iterative solvers derive several setup frames from their edge
     input (vertex universe, out-degrees, adjacency); when the input's
@@ -54,7 +54,14 @@ def materialize_input(edges: DataFrame, *cols: str):
     extraction, the tokenizer), every derivation re-traverses it — ~10
     AQE stage-jobs per traversal — and racing broadcast-subplan builds
     in the first superstep can traverse it again. One narrow cached
-    projection makes every derivation a cache scan. Callers must
+    projection makes every derivation a cache scan.
+
+    The cache is filled lazily, by the caller's first action: on the
+    driver path that is ``smallgraph.fetch``, the one job that runs the
+    input's plan; when the fetch declines (too many edges), the
+    DataFrame path's setup actions read the cache that job filled (and
+    fill any partition still missing). An eager ``count()`` here would
+    run the input's plan once more before the fetch. Callers must
     ``unpersist()`` the returned frame (a no-op if it wasn't persisted
     here) once their own cached frames are filled.
 
@@ -64,9 +71,7 @@ def materialize_input(edges: DataFrame, *cols: str):
     lvl = edges.storageLevel
     if lvl.useMemory or lvl.useDisk:
         return proj
-    proj = proj.persist()
-    proj.count()
-    return proj
+    return proj.persist()
 
 
 def vertices_from_sentences(sentences: DataFrame) -> DataFrame:

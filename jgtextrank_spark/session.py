@@ -8,7 +8,16 @@ defaults are the ones that matter at 100 TB:
 * Arrow on (every Python-side UDF in this engine is a vectorized
   pandas/Arrow UDF — there are no row-at-a-time Python UDFs),
 * shuffle partitions sized to the core count by default (callers running
-  on a real cluster should size to 2-3x total cores).
+  on a real cluster should size to 2-3x total cores),
+* no per-call call-site capture. With
+  ``spark.python.sql.dataFrameDebugging.enabled`` on (PySpark's default),
+  every DataFrame and Column call walks the Python stack (importing
+  IPython on first use, about 0.5 s) and makes extra py4j round trips,
+  so that an error raised inside a query (say an ANSI ``DIVIDE_BY_ZERO``)
+  can point at the Python line that built the failing expression. Off,
+  such an error does not point at that line. To get it back, set the key
+  to ``"true"`` in ``extra_conf`` of the first ``get_spark`` of the
+  process: PySpark reads the setting once, at the first Column call.
 """
 
 from __future__ import annotations
@@ -123,6 +132,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

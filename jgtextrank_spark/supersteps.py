@@ -6,9 +6,10 @@ DataFrame jobs. This harness centralizes the physical concerns that make
 such loops survive hundreds of supersteps at 100 TB scale:
 
 * **Lineage truncation**: each superstep's state is ``localCheckpoint``-ed
-  and the previous one unpersisted, so the logical plan doesn't grow
-  without bound; every ``checkpoint_every`` supersteps it is also written
-  reliably to ``checkpoint_dir``.
+  and the previous one released (``release``), so neither the logical
+  plan nor the cached states grow without bound; every
+  ``checkpoint_every`` supersteps it is also written reliably to
+  ``checkpoint_dir``.
 * **Checkpoint-resume**: with ``checkpoint_dir`` set, state parquet +
   a meta JSON (iteration, delta, partitioning lineage) is written per
   checkpoint; ``run_supersteps`` resumes from the newest valid checkpoint.
@@ -37,6 +38,7 @@ from . import fsutil
 __all__ = [
     "SuperstepResult",
     "read_checkpoint",
+    "release",
     "run_supersteps",
     "write_checkpoint",
 ]
@@ -52,6 +54,17 @@ class SuperstepResult:
     @property
     def total_wall_ms(self) -> float:
         return sum(m["wall_ms"] for m in self.metrics)
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist ``df``, and drop the data of a ``localCheckpoint``-ed
+    frame as well: ``DataFrame.unpersist`` leaves a local checkpoint's RDD
+    in the block manager until the JVM happens to collect it, one state
+    per superstep. Only for frames nothing else reads any more."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _checkpoint_path(checkpoint_dir: str, iteration: int) -> str:
@@ -177,7 +190,10 @@ def run_supersteps(
         new_state.unpersist()
         new_state = truncated
         wall_ms = (time.monotonic() - t0) * 1000.0
-        state.unpersist()
+        if it == start_iter + 1:
+            state.unpersist()  # the caller's frame: leave its data alone
+        else:
+            release(state)
         state = new_state
 
         row = {
@@ -194,6 +210,7 @@ def run_supersteps(
                 state_path = write_checkpoint(
                     spark, checkpoint_dir, it, state, delta, label
                 )
+                release(state)
                 # reload from the durable checkpoint (also truncates lineage
                 # to a plain parquet scan)
                 state = spark.read.parquet(state_path).persist()

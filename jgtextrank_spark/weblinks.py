@@ -22,10 +22,15 @@ corpora — absolute http(s), protocol-relative (``//h/p``), root-relative
 (javascript/mailto/data/tel) and pure-fragment links, and removes
 dot-segments (``./``, ``../`` incl. above-root clamping) from the
 resolved path via the exact RFC 3986 §5.2.4 stack algorithm (one
-``aggregate`` over path segments — no nesting-depth limit, and a single
-small generated method where the previous fixed chain of 24
-``regexp_replace`` passes blew the janino method-size limit and dropped
-the whole projection out of whole-stage codegen).
+``aggregate`` over path segments — no nesting-depth limit). The
+resolver reads each of its inputs and parsed parts many times; each is
+bound once with ``_let`` (a lambda variable of a one-element
+``transform``), so the plan holds the resolver once instead of once per
+use: ``link_edges``' optimized plan over one page holds 12
+``regexp_extract`` nodes (the projection's copy and the pushed-down
+filter's), where inlined Python variables gave 450 for Catalyst to
+optimize and plan on the driver. ``aggregate`` and ``transform`` are
+interpreted, outside whole-stage codegen.
 ``canonicalize_url`` adds scheme/host lowercasing, default-port
 stripping, and percent-escape hex-case normalization; IDN host folding
 needs the punycode algorithm and ships as an Arrow-batched pandas UDF
@@ -192,12 +197,34 @@ def anchor_text_table(
         F.col("src_url").alias("src"),
         resolve_href(F.col("src_url"), F.col("href")).alias("dst"),
         "anchor",
-    ).where(F.col("dst").isNotNull())
-    if drop_self_loops:
-        resolved = resolved.where(F.col("src") != F.col("dst"))
+    ).where(_kept_link(drop_self_loops))
     return resolved.groupBy("dst", "anchor").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
+
+
+# scheme://authority of an absolute URL (group 1) and the path after it
+# (group 2); query and fragment are excluded from the path
+_ORIGIN_PATH = r"^([a-z][a-z0-9+.-]*://[^/?#]+)([^?#]*)"
+
+
+def _let(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``: ``value`` sits in the
+    plan once, however often ``body`` reads ``v`` (a Python variable
+    would copy its expression into the plan at every use). ``v`` is the
+    lambda variable of a ``transform`` over the one-element
+    ``array(value)``, so a NULL ``value`` binds as NULL."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _kept_link(drop_self_loops: bool) -> Column:
+    """Keep resolved links: ``dst`` not NULL, and not ``src`` either when
+    self-loops are dropped. One predicate, because the optimizer copies
+    ``dst``'s resolver into every predicate it pushes below the
+    projection; ``src != dst`` is NULL, so false, on a NULL ``dst``."""
+    if drop_self_loops:
+        return F.col("src") != F.col("dst")
+    return F.col("dst").isNotNull()
 
 
 def normalize_dot_segments(url: Column) -> Column:
@@ -206,65 +233,92 @@ def normalize_dot_segments(url: Column) -> Column:
     clamps to ``/`` (browser behaviour). Implemented as the exact stack
     algorithm — ONE ``aggregate`` over the ``/``-split segments (``.``
     skipped, ``..`` pops, anything else pushed) — so arbitrary nesting
-    depth resolves and the whole resolver stays inside a single small
-    whole-stage-codegen method. A trailing ``.``/``..`` segment yields a
-    trailing slash, and empty segments (``//``) are ordinary stack
-    entries, both per the RFC. The origin is split off first so
-    ``https://h.org/../x`` clamps instead of eating the host."""
-    origin = F.regexp_extract(url, r"^([a-z][a-z0-9+.-]*://[^/?#]+)", 1)
-    tail = F.substr(url, F.length(origin) + 1)
-    path = F.regexp_extract(tail, r"^([^?#]*)", 1)  # query/fragment kept
-    rest = F.substr(tail, F.length(path) + 1)
-    segs = F.split(path, "/")  # absolute path ⇒ segs[0] == ""
-    stack = F.aggregate(
-        F.slice(segs, 2, F.greatest(F.size(segs) - 1, F.lit(0))),
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, s: F.when(s == ".", acc)
-        .when(
-            s == "..",
-            F.slice(acc, 1, F.greatest(F.size(acc) - 1, F.lit(0))),
+    depth resolves. A trailing ``.``/``..`` segment yields a trailing
+    slash, and empty segments (``//``) are ordinary stack entries, both
+    per the RFC. The origin is split off first so ``https://h.org/../x``
+    clamps instead of eating the host; a URL without one is returned
+    as is. ``url`` is evaluated once (``_let``)."""
+
+    def parts(u: Column) -> Column:
+        return F.struct(
+            u.alias("url"),
+            F.regexp_extract(u, _ORIGIN_PATH, 1).alias("origin"),
+            F.regexp_extract(u, _ORIGIN_PATH, 2).alias("path"),
         )
-        .otherwise(F.concat(acc, F.array(s))),
-    )
-    # a trailing '.'/'..' input segment leaves a trailing '/' in the output
-    stack = F.when(
-        F.element_at(segs, -1).isin(".", ".."),
-        F.concat(stack, F.array(F.lit(""))),
-    ).otherwise(stack)
-    npath = F.when(path == "", F.lit("")).otherwise(
-        F.concat(F.lit("/"), F.array_join(stack, "/"))
-    )
-    return F.when(origin == "", url).otherwise(F.concat(origin, npath, rest))
+
+    def normalized(p: Column) -> Column:
+        path = p["path"]
+        # query/fragment kept byte for byte
+        rest = F.substr(p["url"], F.length(p["origin"]) + F.length(path) + 1)
+        npath = _let(
+            F.split(path, "/"),  # absolute path => segs[0] == ""
+            lambda segs: F.aggregate(
+                F.slice(segs, 2, F.greatest(F.size(segs) - 1, F.lit(0))),
+                F.expr("cast(array() as array<string>)"),
+                lambda acc, s: F.when(s == ".", acc)
+                .when(
+                    s == "..",
+                    F.slice(acc, 1, F.greatest(F.size(acc) - 1, F.lit(0))),
+                )
+                .otherwise(F.concat(acc, F.array(s))),
+                # a trailing '.'/'..' input segment leaves a trailing '/'
+                lambda stack: F.concat(
+                    F.lit("/"),
+                    F.array_join(
+                        F.when(
+                            F.element_at(segs, -1).isin(".", ".."),
+                            F.concat(stack, F.array(F.lit(""))),
+                        ).otherwise(stack),
+                        "/",
+                    ),
+                ),
+            ),
+        )
+        npath = F.when(path == "", F.lit("")).otherwise(npath)
+        return F.when(p["origin"] == "", p["url"]).otherwise(
+            F.concat(p["origin"], npath, rest)
+        )
+
+    return _let(url, lambda u: _let(parts(u), normalized))
 
 
 def resolve_href(base: Column, href: Column) -> Column:
     """Absolute target URL for ``href`` found on page ``base``, or NULL
     for non-navigational targets. Fragments are stripped first (links to
-    an anchor on the same resource are the same edge)."""
-    h = F.trim(href)
-    h = F.split_part(h, F.lit("#"), F.lit(1))  # strip fragment
-    scheme = F.regexp_extract(base, r"^([a-z][a-z0-9+.-]*):", 1)
-    origin = F.regexp_extract(base, r"^([a-z][a-z0-9+.-]*://[^/?#]+)", 1)
-    # directory of the base: last '/' of the PATH component only — the
-    # query/fragment are excluded first (a '/' inside '?x=/y' is not a
-    # path separator), and a base with no path at all ('https://h.org')
-    # resolves relative references against '/'
-    base_path = F.regexp_extract(
-        base, r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1
-    )
-    path_dir = F.regexp_extract(base_path, r"^(.*/)", 1)
-    base_dir = F.concat(
-        origin, F.when(path_dir == "", F.lit("/")).otherwise(path_dir)
-    )
-    resolved = (
-        F.when(h == "", F.lit(None).cast("string"))
-        .when(h.rlike(r"(?i)^(javascript|mailto|data|tel):"), F.lit(None))
-        .when(h.rlike(r"(?i)^https?://"), h)
-        .when(h.startswith("//"), F.concat(scheme, F.lit(":"), h))
-        .when(h.startswith("/"), F.concat(origin, h))
-        .otherwise(F.concat(base_dir, h))
-    )
-    return normalize_dot_segments(resolved)
+    an anchor on the same resource are the same edge). Each input and
+    each part parsed from it is evaluated once (``_let``), so the plan
+    grows linearly with the resolver, not with its uses."""
+
+    def parts(b: Column) -> Column:
+        # directory of the base: last '/' of the PATH component only — the
+        # query/fragment are excluded first (a '/' inside '?x=/y' is not a
+        # path separator), and a base with no path at all ('https://h.org')
+        # resolves relative references against '/'
+        path_dir = F.regexp_extract(
+            F.regexp_extract(b, _ORIGIN_PATH, 2), r"^(.*/)", 1
+        )
+        return F.struct(
+            F.split_part(F.trim(href), F.lit("#"), F.lit(1)).alias("h"),
+            F.regexp_extract(b, r"^([a-z][a-z0-9+.-]*):", 1).alias("scheme"),
+            F.regexp_extract(b, _ORIGIN_PATH, 1).alias("origin"),
+            path_dir.alias("path_dir"),
+        )
+
+    def resolved(p: Column) -> Column:
+        h, origin, path_dir = p["h"], p["origin"], p["path_dir"]
+        base_dir = F.concat(
+            origin, F.when(path_dir == "", F.lit("/")).otherwise(path_dir)
+        )
+        return (
+            F.when(h == "", F.lit(None).cast("string"))
+            .when(h.rlike(r"(?i)^(javascript|mailto|data|tel):"), F.lit(None))
+            .when(h.rlike(r"(?i)^https?://"), h)
+            .when(h.startswith("//"), F.concat(p["scheme"], F.lit(":"), h))
+            .when(h.startswith("/"), F.concat(origin, h))
+            .otherwise(F.concat(base_dir, h))
+        )
+
+    return normalize_dot_segments(_let(_let(base, parts), resolved))
 
 
 def link_edges(
@@ -281,9 +335,7 @@ def link_edges(
     resolved = hrefs.select(
         F.col("src_url").alias("src"),
         resolve_href(F.col("src_url"), F.col("href")).alias("dst"),
-    ).where(F.col("dst").isNotNull())
-    if drop_self_loops:
-        resolved = resolved.where(F.col("src") != F.col("dst"))
+    ).where(_kept_link(drop_self_loops))
     return resolved.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("double").alias("weight")
     )

@@ -250,14 +250,20 @@ def run(spark, args) -> dict:
 def _get_session():
     """Under spark-submit, respect the submit command's master/conf (it
     lands in the JVM system properties that SparkConf reads); standalone,
-    fall back to the library's local-mode factory."""
+    fall back to the library's local-mode factory. Either way call-site
+    capture is off (see ``session``) unless the submit conf sets it; the
+    setting counts only before the first Column call."""
     from pyspark import SparkConf
     from pyspark.sql import SparkSession
 
     from jgtextrank_spark.session import get_spark, ship_package
 
-    if SparkConf().contains("spark.master"):
+    conf = SparkConf()
+    if conf.contains("spark.master"):
         spark = SparkSession.builder.getOrCreate()
+        key = "spark.python.sql.dataFrameDebugging.enabled"
+        if not conf.contains(key):
+            spark.conf.set(key, "false")
         ship_package(spark)  # a no-op when --py-files shipped the same zip
         return spark
     return get_spark(master=os.environ.get("SPARK_MASTER"))
