@@ -302,8 +302,8 @@ def _components_local(
             F.col("id").cast(graph.vfield.dataType),
             F.col("label").cast(graph.vfield.dataType),
         ).toArrow()
-        owner, has_owner = graph.positions(prior, 0)
-        target, has_target = graph.positions(prior, 1)
+        owner, has_owner = graph.positions(prior.column(0))
+        target, has_target = graph.positions(prior.column(1))
         keep = has_owner & has_target
         np.minimum.at(labels, owner[keep], target[keep])
         src = np.concatenate([src, owner[keep]])

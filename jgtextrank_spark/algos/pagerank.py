@@ -29,10 +29,11 @@ Two solvers run that recurrence; ``pagerank_result`` picks one per call.
   exactly one action.
 
 Both return the same ``SuperstepResult`` (state ``vertex, dangling, rank,
-prev_rank`` plus ``pv`` when personalized) and write and resume the same
-checkpoints through ``supersteps.write_checkpoint`` /
-``read_checkpoint``, so a run checkpointed by one solver resumes on the
-other.
+prev_rank`` plus ``pv`` when personalized; the driver solve also hands
+back its Arrow ``table``) and write and resume the same checkpoints
+through ``supersteps.write_checkpoint`` / ``read_checkpoint``, so a run
+checkpointed by one solver resumes on the other. The driver solve writes
+and reads its checkpoints on the driver, with no Spark job.
 
 For undirected graphs pass ``graph.symmetrize(edges)`` — matching how
 networkx treats an undirected graph (each edge in both directions,
@@ -435,10 +436,10 @@ def pagerank_local_scores(
     return x
 
 
-def _state_frame(spark, ids, vfield, dangling, rank, prev_rank, pv):
-    """The solver state as a DataFrame, with the DataFrame loop's column
-    order and nullability so both solvers write identical checkpoint
-    schemas."""
+def _state_table(ids, vfield, dangling, rank, prev_rank, pv):
+    """The solver state as ``(Arrow table, Spark schema)``, with the
+    DataFrame loop's column order and nullability so both solvers write
+    identical checkpoint schemas."""
     fields = [
         T.StructField("vertex", vfield.dataType, vfield.nullable),
         T.StructField("dangling", T.BooleanType(), False),
@@ -450,7 +451,7 @@ def _state_frame(spark, ids, vfield, dangling, rank, prev_rank, pv):
         fields.append(T.StructField("pv", T.DoubleType(), False))
         cols.append(pv)
     table = pa.table(cols, names=[f.name for f in fields])
-    return spark.createDataFrame(table, schema=T.StructType(fields))
+    return table, T.StructType(fields)
 
 
 def _pagerank_local(
@@ -459,7 +460,7 @@ def _pagerank_local(
 ) -> tuple[SuperstepResult, int]:
     """The DataFrame loop's recurrence, superstep for superstep, in numpy
     on the driver. Same stopping rule (L1 delta <= N*tol), same metrics
-    rows, same checkpoint files."""
+    rows, same checkpoint files, written and read on the driver."""
     ids, vfield, src, dst, n = (
         graph.ids, graph.vfield, graph.src, graph.dst, graph.n
     )
@@ -470,7 +471,7 @@ def _pagerank_local(
         p = personalization.select(
             F.col("id").cast(vtype), F.col("weight").cast("double")
         ).toArrow()
-        pos, found = graph.positions(p)
+        pos, found = graph.positions(p.column(0))
         pw = p.column(1).fill_null(0.0).to_numpy()
         pv = np.bincount(pos[found], weights=pw[found], minlength=n)
         psum = pv.sum()
@@ -481,12 +482,14 @@ def _pagerank_local(
             )
         pv = pv / psum
 
+    def result(it, converged, metrics, *state):
+        table, schema = _state_table(ids, vfield, *state, pv)
+        frame = spark.createDataFrame(table, schema=schema)
+        return SuperstepResult(frame, it, converged, metrics, table), n
+
     if n == 0:
         empty = np.empty(0)
-        state = _state_frame(
-            spark, ids, vfield, empty.astype(bool), empty, empty, pv
-        )
-        return SuperstepResult(state, 0, True, []), 0
+        return result(0, True, [], empty.astype(bool), empty, empty)
 
     # nx starts uniform, even personalized; a warm start seeds from prior
     # scores (uniform 1/n for ids without one), renormalized to sum 1
@@ -495,7 +498,7 @@ def _pagerank_local(
         r = init_scores.select(
             F.col("id").cast(vtype), F.col("rank").cast("double")
         ).toArrow()
-        pos, found = graph.positions(r)
+        pos, found = graph.positions(r.column(0))
         found &= r.column(1).is_valid().to_numpy(zero_copy_only=False)
         x[pos[found]] = r.column(1).fill_null(0.0).to_numpy()[found]
         rsum = x.sum()
@@ -506,19 +509,20 @@ def _pagerank_local(
     metrics: list[dict] = []
     start_iter = 0
     found_ckpt = (
-        read_checkpoint(spark, checkpoint_dir, "pagerank") if resume else None
+        read_checkpoint(spark, checkpoint_dir, "pagerank", "local")
+        if resume
+        else None
     )
     if found_ckpt is not None:
         start_iter, ckpt, resume_row = found_ckpt
-        r = ckpt.select(F.col("vertex").cast(vtype), "rank").toArrow()
-        pos, found = graph.positions(r)
-        if r.num_rows != n or not found.all():
+        pos, found = graph.positions(ckpt.column("vertex"))
+        if ckpt.num_rows != n or not found.all():
             raise ValueError(
                 f"checkpoint under {checkpoint_dir} holds a different "
                 "vertex set than this graph"
             )
         x = np.empty(n)
-        x[pos] = r.column(1).to_numpy()
+        x[pos] = ckpt.column("rank").to_numpy()
         metrics.append(resume_row)
 
     steps = _power_steps(src, dst, nw, dangling, x, alpha, pv)
@@ -534,12 +538,12 @@ def _pagerank_local(
             "delta": delta,
             "event": "step",
             "label": "pagerank",
+            "path": "local",
         }
         if checkpoint_dir and checkpoint_every and it % checkpoint_every == 0:
+            table, schema = _state_table(ids, vfield, dangling, x, prev, pv)
             write_checkpoint(
-                spark, checkpoint_dir, it,
-                _state_frame(spark, ids, vfield, dangling, x, prev, pv),
-                delta, "pagerank",
+                spark, checkpoint_dir, it, table, delta, "pagerank", schema
             )
             row["event"] = "checkpoint"
         metrics.append(row)
@@ -547,8 +551,7 @@ def _pagerank_local(
             converged = True
             break
 
-    state = _state_frame(spark, ids, vfield, dangling, x, prev, pv)
-    return SuperstepResult(state, it, converged, metrics), n
+    return result(it, converged, metrics, dangling, x, prev)
 
 
 def pagerank(

@@ -91,10 +91,10 @@ class LocalGraph:
     def n(self) -> int:
         return len(self.ids)
 
-    def positions(self, table: pa.Table, col: int = 0):
-        """Codes of ``table``'s column ``col`` (cast to the vertex type by
-        the caller), and the mask of rows whose id is in the graph."""
-        pos = pc.index_in(table.column(col), value_set=self.ids)
+    def positions(self, values: pa.Array | pa.ChunkedArray):
+        """Codes of ``values`` (cast to the vertex type), and the mask of
+        the values that are ids of the graph."""
+        pos = pc.index_in(values.cast(self.ids.type), value_set=self.ids)
         found = pos.is_valid().to_numpy(zero_copy_only=False)
         return pos.fill_null(0).to_numpy(), found
 
@@ -157,20 +157,23 @@ def label_loop(
     ``max_iter``. Returns the same ``SuperstepResult`` as the DataFrame
     loops (state ``vertex, label, prev_label``, one metrics row per round
     with ``delta`` = changed labels, a ``"resume"`` row first on resume)
-    and writes and resumes the same checkpoint files."""
+    and writes and resumes the same checkpoint files, from the driver
+    (``supersteps.write_table`` / ``read_table``)."""
     metrics: list[dict] = []
     prev = None
     start_iter = 0
-    found = read_checkpoint(spark, checkpoint_dir, label) if resume else None
+    found = (
+        read_checkpoint(spark, checkpoint_dir, label, "local")
+        if resume
+        else None
+    )
     if found is not None:
         start_iter, ckpt, resume_row = found
-        vtype = graph.vfield.dataType
-        table = ckpt.select(
-            *(F.col(c).cast(vtype) for c in ("vertex", "label", "prev_label"))
-        ).toArrow()
-        pos, found_v = graph.positions(table, 0)
-        codes = [graph.positions(table, c) for c in (1, 2)]
-        if table.num_rows != graph.n or not (
+        pos, found_v = graph.positions(ckpt.column("vertex"))
+        codes = [
+            graph.positions(ckpt.column(c)) for c in ("label", "prev_label")
+        ]
+        if ckpt.num_rows != graph.n or not (
             found_v.all() and all(f.all() for _, f in codes)
         ):
             raise ValueError(
@@ -182,7 +185,9 @@ def label_loop(
         labels[pos], prev[pos] = codes[0][0], codes[1][0]
         metrics.append(resume_row)
 
-    def frame(cur, before):
+    def state(cur, before):
+        """``(table, schema)``: vertex, label and, after a round,
+        prev_label, with the DataFrame loop's schema."""
         vf = graph.vfield
         fields = [
             T.StructField("vertex", vf.dataType, vf.nullable),
@@ -195,7 +200,7 @@ def label_loop(
             )
             cols.append(graph.ids.take(pa.array(before)))
         table = pa.table(cols, names=[f.name for f in fields])
-        return spark.createDataFrame(table, schema=T.StructType(fields))
+        return table, T.StructType(fields)
 
     converged = False
     it = start_iter
@@ -210,17 +215,23 @@ def label_loop(
             "delta": delta,
             "event": "step",
             "label": label,
+            "path": "local",
         }
         if checkpoint_dir and checkpoint_every and it % checkpoint_every == 0:
+            table, schema = state(labels, prev)
             write_checkpoint(
-                spark, checkpoint_dir, it, frame(labels, prev), delta, label
+                spark, checkpoint_dir, it, table, delta, label, schema
             )
             row["event"] = "checkpoint"
         metrics.append(row)
         if delta <= 0:
             converged = True
             break
-    return SuperstepResult(frame(labels, prev), it, converged, metrics)
+    table, schema = state(labels, prev)
+    return SuperstepResult(
+        spark.createDataFrame(table, schema=schema), it, converged, metrics,
+        table,
+    )
 
 
 def _to_nx(edges: DataFrame, vertices: DataFrame | None, directed: bool):

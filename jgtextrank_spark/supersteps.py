@@ -1,4 +1,5 @@
-"""Generic iterative superstep harness for DataFrame graph algorithms.
+"""Generic iterative superstep harness for DataFrame graph algorithms,
+and the one checkpoint format every solver loop shares.
 
 Catalyst has no fixpoint operator, so every iterative solver (PageRank,
 HITS, connected components, LPA, k-core...) is a driver-side loop of
@@ -14,12 +15,28 @@ such loops survive hundreds of supersteps at 100 TB scale:
   a meta JSON (iteration, delta, partitioning lineage) is written per
   checkpoint; ``run_supersteps`` resumes from the newest valid checkpoint.
 * **Per-superstep metrics**: (iteration, wall_ms, delta, state rows if
-  cheap, partition count, checkpoint events) accumulated and returned.
+  cheap, partition count, checkpoint events, and ``path``: ``"dataframe"``
+  here, ``"local"`` in the driver loops) accumulated and returned.
 
 The step function owns the algorithm: ``step(state, i) -> (new_state,
 delta)`` where ``delta`` is the algorithm's convergence measure (L1 error,
 #changed labels, ...), computed as part of materializing the new state (one
 action per superstep). ``delta=None`` means "not converged / not measured".
+
+**One checkpoint format, written where the state lives.** A checkpoint
+is ``<checkpoint_dir>/superstep_<iteration>/`` holding a ``state/``
+parquet directory and ``_superstep_meta.json``, written last so that its
+presence marks the state complete. The DataFrame loops hold their state
+in Spark, so Spark's parquet writer writes it and ``spark.read.parquet``
+reads it back. The driver loops (``pagerank._pagerank_local``,
+``smallgraph.label_loop``) hold theirs as an Arrow table on the driver:
+``write_table`` builds the parquet bytes with pyarrow and
+``read_table`` reads them back, both through ``fsutil`` (the Hadoop
+FileSystem, so ``hdfs://``/``s3a://`` dirs keep working), with no Spark
+job either way. ``write_table`` writes one ``part-00000.parquet`` plus
+``_SUCCESS``, with Spark's own schema key in the footer; ``read_table``
+reads every non-hidden ``*.parquet`` part, so each loop resumes the
+other's checkpoints.
 """
 
 from __future__ import annotations
@@ -31,25 +48,39 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import fsutil
 
 __all__ = [
     "SuperstepResult",
     "read_checkpoint",
+    "read_table",
     "release",
     "run_supersteps",
     "write_checkpoint",
+    "write_table",
 ]
+
+# the footer key under which Spark's parquet writer records the schema
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
 class SuperstepResult:
+    """A solver loop's outcome. ``table`` is the final state as an Arrow
+    table when the loop held it on the driver (``state`` is then a frame
+    over it), None on the DataFrame loops."""
+
     state: DataFrame
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
+    table: pa.Table | None = None
 
     @property
     def total_wall_ms(self) -> float:
@@ -65,6 +96,44 @@ def release(df: DataFrame) -> None:
     plan = df._jdf.queryExecution().logical()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
+
+
+def write_table(
+    spark: SparkSession, path: str, table: pa.Table, schema: T.StructType
+) -> None:
+    """Replace the parquet directory ``path`` with ``table`` (cast to
+    ``schema``), written from the driver: one ``part-00000.parquet`` and
+    an empty ``_SUCCESS``, as ``df.write.mode("overwrite").parquet(path)``
+    would leave for a one-partition frame. No Spark job runs."""
+    table = table.cast(to_arrow_schema(schema)).replace_schema_metadata(
+        {_SPARK_SCHEMA_KEY: schema.json()}
+    )
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fsutil.delete(spark, path, recursive=True)
+    fsutil.write_bytes(
+        spark, os.path.join(path, "part-00000.parquet"), buf.getvalue()
+    )
+    fsutil.write_bytes(spark, os.path.join(path, "_SUCCESS"), b"")
+
+
+def read_table(spark: SparkSession, path: str) -> pa.Table:
+    """The parquet directory ``path`` as one Arrow table, read on the
+    driver: every ``*.parquet`` part whose name does not start with
+    ``_`` or ``.`` (so not ``_SUCCESS`` or a ``.crc`` file), whoever wrote
+    it. No Spark job runs."""
+    parts = [
+        pq.ParquetFile(
+            pa.BufferReader(
+                fsutil.read_bytes(spark, os.path.join(path, name))
+            )
+        ).read()
+        for name in fsutil.list_dir(spark, path)
+        if name.endswith(".parquet") and name[0] not in "_."
+    ]
+    if not parts:
+        raise ValueError(f"no parquet part under {path}")
+    return pa.concat_tables(parts)
 
 
 def _checkpoint_path(checkpoint_dir: str, iteration: int) -> str:
@@ -91,25 +160,35 @@ def write_checkpoint(
     spark: SparkSession,
     checkpoint_dir: str,
     iteration: int,
-    state: DataFrame,
+    state: DataFrame | pa.Table,
     delta: float | None,
     label: str,
+    schema: T.StructType | None = None,
 ) -> str:
     """Write ``state`` as superstep ``iteration``'s checkpoint: the state
     parquet plus ``_superstep_meta.json``. Returns the state path. Every
     solver that checkpoints writes through here, so a checkpoint written
-    by one solver loop can be resumed by another."""
+    by one solver loop can be resumed by another.
+
+    ``state`` is a DataFrame (written by Spark) or, for a loop that holds
+    its state on the driver, an Arrow table with its Spark ``schema``
+    (written by ``write_table``)."""
     path = _checkpoint_path(checkpoint_dir, iteration)
     state_path = os.path.join(path, "state")
-    state.write.mode("overwrite").parquet(state_path)
+    if isinstance(state, DataFrame):
+        state.write.mode("overwrite").parquet(state_path)
+        schema, partitions = state.schema, state.rdd.getNumPartitions()
+    else:
+        write_table(spark, state_path, state, schema)
+        partitions = 1
     meta = {
         "iteration": iteration,
         "delta": None if delta is None else float(delta),
         "label": label,
         # partition lineage: what the state was partitioned as, so resume
         # can restore co-location cheaply.
-        "partitions": state.rdd.getNumPartitions(),
-        "schema": state.schema.jsonValue(),
+        "partitions": partitions,
+        "schema": schema.jsonValue(),
     }
     fsutil.write_text(
         spark, os.path.join(path, "_superstep_meta.json"), json.dumps(meta)
@@ -118,30 +197,39 @@ def write_checkpoint(
 
 
 def read_checkpoint(
-    spark: SparkSession, checkpoint_dir: str | None, label: str
+    spark: SparkSession,
+    checkpoint_dir: str | None,
+    label: str,
+    solver_path: str,
 ):
     """The newest checkpoint under ``checkpoint_dir`` as ``(iteration,
-    state, metrics row)``, or None. The row is the ``"resume"`` event a
-    resumed loop reports first. Raises ``ValueError`` when the checkpoint
-    was written by a loop with a different ``label``: the state of one
-    algorithm is no starting point for another."""
+    state, metrics row)``, or None. ``solver_path`` names the loop that
+    resumes: ``"dataframe"`` gets the state as a DataFrame, ``"local"`` (a
+    driver loop) as an Arrow table read by ``read_table``. The row is the
+    ``"resume"`` event that loop reports first. Raises ``ValueError`` when
+    the checkpoint was written by a loop with a different ``label``: the
+    state of one algorithm is no starting point for another."""
     found = _find_resume_point(spark, checkpoint_dir)
     if found is None:
         return None
-    iteration, path, meta = found
+    iteration, ckpt_path, meta = found
     if meta.get("label") != label:
         raise ValueError(
             f"checkpoint under {checkpoint_dir} was written by "
             f"{meta.get('label')!r}, not {label!r}"
         )
-    state = spark.read.parquet(os.path.join(path, "state"))
+    state_path = os.path.join(ckpt_path, "state")
     row = {
         "iteration": iteration,
         "wall_ms": 0.0,
         "delta": meta.get("delta"),
         "event": "resume",
-        "partitions": state.rdd.getNumPartitions(),
+        "path": solver_path,
     }
+    if solver_path == "local":
+        return iteration, read_table(spark, state_path), row
+    state = spark.read.parquet(state_path)
+    row["partitions"] = state.rdd.getNumPartitions()
     return iteration, state, row
 
 
@@ -166,7 +254,11 @@ def run_supersteps(
     start_iter = 0
     state = initial_state
 
-    found = read_checkpoint(spark, checkpoint_dir, label) if resume else None
+    found = (
+        read_checkpoint(spark, checkpoint_dir, label, "dataframe")
+        if resume
+        else None
+    )
     if found is not None:
         start_iter, state, resume_row = found
         metrics.append(resume_row)
@@ -202,6 +294,7 @@ def run_supersteps(
             "delta": None if delta is None else float(delta),
             "event": "step",
             "label": label,
+            "path": "dataframe",
         }
 
         do_checkpoint = checkpoint_every and it % checkpoint_every == 0

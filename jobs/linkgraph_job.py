@@ -18,7 +18,11 @@ Edge sources:
 Or pass ``--edges`` to read a prebuilt (src, dst, weight) table directly.
 
 Outputs ``<output>/result`` (parquet) and ``<output>/metrics.json``
-(per-superstep wall/delta/partition rows — the run's lineage record).
+(per-superstep wall/delta/partition rows, each naming the solver path
+that ran it — the run's lineage record), both written through the
+Hadoop FileSystem, so ``--output`` may be any URI Spark can write. When
+PageRank solved on the driver, the driver writes ``result`` from the
+Arrow state it holds; every other run writes it with Spark.
 The job is resumable: re-submitting with the same --checkpoint-dir
 continues from the newest durable superstep checkpoint.
 """
@@ -116,8 +120,12 @@ def build_edges(spark, args):
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 
+    from jgtextrank_spark import fsutil
+    from jgtextrank_spark.supersteps import write_table
+
     edges = build_edges(spark, args)
     metrics: list[dict] = []
+    table = None  # the result, when the solver left it on the driver
     if args.algo == "pagerank":
         from jgtextrank_spark.algos.pagerank import pagerank_result
         from jgtextrank_spark.graph import symmetrize
@@ -137,6 +145,10 @@ def run(spark, args) -> dict:
         )
         out = res.state.select("vertex", F.col("rank").alias("score"))
         metrics = res.metrics
+        if res.table is not None:
+            table = res.table.select(["vertex", "rank"]).rename_columns(
+                ["vertex", "score"]
+            )
     elif args.algo in ("components", "components_star"):
         from jgtextrank_spark.algos.components import connected_components
 
@@ -229,21 +241,23 @@ def run(spark, args) -> dict:
 
         out = triangle_counts(edges)
 
-    out.write.mode("overwrite").parquet(os.path.join(args.output, "result"))
+    result = os.path.join(args.output, "result")
+    if table is not None:
+        write_table(spark, result, table, out.schema)
+        rows = table.num_rows
+    else:
+        out.write.mode("overwrite").parquet(result)
+        rows = spark.read.parquet(result).count()
     summary = {
         "algo": args.algo,
-        "rows": spark.read.parquet(
-            os.path.join(args.output, "result")
-        ).count(),
+        "rows": rows,
         "superstep_metrics": metrics,
     }
-    # local/posix path only; on object stores write via the DataFrame API
-    try:
-        os.makedirs(args.output, exist_ok=True)
-        with open(os.path.join(args.output, "metrics.json"), "w") as fh:
-            json.dump(summary, fh, indent=1)
-    except OSError:
-        pass
+    fsutil.write_text(
+        spark,
+        os.path.join(args.output, "metrics.json"),
+        json.dumps(summary, indent=1),
+    )
     return summary
 
 

@@ -81,3 +81,17 @@ def test_louvain_zero_signal_honors_init(spark):
     )
     got3 = {r["vertex"]: r["community"] for r in comm3.collect()}
     assert got3 == {"a": "c1", "b": "c1"} and conv3
+
+
+def test_fsutil_bytes_roundtrip(spark, tmp_path):
+    """``write_bytes``/``read_bytes`` move arbitrary bytes unchanged (the
+    checkpoint parquet parts of the driver loops travel this way), and
+    ``write_text``/``read_text`` are their UTF-8 wrappers."""
+    path = str(tmp_path / "b" / "blob")
+    data = bytes(range(256)) * 5
+    fsutil.write_bytes(spark, path, data)
+    assert fsutil.read_bytes(spark, path) == data
+    fsutil.write_bytes(spark, path, b"")
+    assert fsutil.read_bytes(spark, path) == b""
+    fsutil.write_text(spark, path, "é日本")
+    assert fsutil.read_bytes(spark, path) == "é日本".encode("utf-8")

@@ -8,6 +8,8 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
 
 import linkgraph_job  # noqa: E402
@@ -65,6 +67,37 @@ def test_job_pagerank_resumes(spark, tmp_path):
         for r in spark.read.parquet(out + "/result").collect()
     }
     assert abs(sum(scores.values()) - 1.0) < 1e-9
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "components_star"])
+def test_job_output_uri_holds_result_and_metrics(
+    spark, tmp_path, monkeypatch, algo
+):
+    """A ``file://`` output gets ``result`` and ``metrics.json`` side by
+    side, and nothing lands under the working directory. The driver-path
+    PageRank writes ``result`` from its Arrow state, and every superstep
+    row in ``metrics.json`` names the path that ran it."""
+    edges = _write_edges(spark, tmp_path)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = tmp_path / "out"
+    args = linkgraph_job.parse_args(
+        ["--edges", edges, "--output", out.as_uri(), "--algo", algo,
+         "--checkpoint-dir", str(tmp_path / "ckpt"),
+         "--checkpoint-every", "2", "--max-iter", "4"]
+    )
+    summary = linkgraph_job.run(spark, args)
+    assert list(cwd.iterdir()) == []
+    meta = json.loads((out / "metrics.json").read_text())
+    assert meta["algo"] == algo
+    result = spark.read.parquet(out.as_uri() + "/result")
+    assert meta["rows"] == summary["rows"] == result.count() == 4
+    if algo == "pagerank":
+        assert [m["path"] for m in meta["superstep_metrics"]] == ["local"] * 4
+        assert result.schema.names == ["vertex", "score"]
+        scores = [r["score"] for r in result.collect()]
+        assert abs(sum(scores) - 1.0) < 1e-9
 
 
 def test_job_scc_and_salsa_on_edge_table(spark, tmp_path):
