@@ -16,7 +16,7 @@ from jgtextrank_spark.algos import smallgraph
 from jgtextrank_spark.algos.components import connected_components_result
 from jgtextrank_spark.algos.labelprop import label_propagation_result
 from jgtextrank_spark.algos.pagerank import pagerank_result
-from jgtextrank_spark.supersteps import read_table
+from jgtextrank_spark.supersteps import read_table, release
 
 _SPARK_TYPES = {
     "string": T.StringType(),
@@ -50,6 +50,13 @@ def _solver(df, algo):
             df, max_iter=it, **kw
         ),
     }[algo]
+
+
+def _release(*results):
+    """Drop the final states the DataFrame loops leave persisted."""
+    for res in results:
+        if res.table is None:
+            release(res.state)
 
 
 def _job_count(spark, group, fn):
@@ -102,7 +109,7 @@ def test_checkpoint_schema_is_the_metas_on_both_paths(
     read = {}
     for path in solver_paths():
         ckpt = str(tmp_path / path)
-        solve(2, checkpoint_every=2, checkpoint_dir=ckpt)
+        _release(solve(2, checkpoint_every=2, checkpoint_dir=ckpt))
         meta_path = os.path.join(
             ckpt, "superstep_000002", "_superstep_meta.json"
         )
@@ -189,3 +196,4 @@ def test_metrics_rows_name_the_solver_path(
     ]
     assert (legs[0].table is None) == (first == "dataframe")
     assert (legs[1].table is None) == (other == "dataframe")
+    _release(*legs)

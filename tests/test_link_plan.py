@@ -109,7 +109,7 @@ def test_pagerank_runs_link_plan_once(spark, solver_path, monkeypatch):
         return fetch(df)
 
     monkeypatch.setattr(smallgraph, "fetch", spy)
-    persisted = len(sc._jsc.getPersistentRDDs())
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
     sc.setJobGroup(group, group)
     try:
         res, n = pagerank_result(link_edges(pages), max_iter=8, tol=0.0)
@@ -118,7 +118,9 @@ def test_pagerank_runs_link_plan_once(spark, solver_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     release(res.state)
     assert before_fetch == [0]
-    assert len(sc._jsc.getPersistentRDDs()) == persisted
+    # no RDD this test persisted stays persisted; one an earlier test
+    # left behind may be cleaned up meanwhile (ContextCleaner)
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
     # the 8-superstep recurrence from the uniform start, in numpy
     ids = sorted(scores)
     idx = {v: i for i, v in enumerate(ids)}

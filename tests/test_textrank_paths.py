@@ -164,9 +164,11 @@ def test_call_leaves_no_cached_frame(spark, keyword_paths):
     sentences = _two_docs(spark)
     for _path in keyword_paths():
         for weight_comb in ("norm_max", "gcvalue"):
-            before = len(sc._jsc.getPersistentRDDs())
+            # ids, not a count: the context cleaner may drop an RDD an
+            # earlier test left persisted while the call runs
+            before = set(sc._jsc.getPersistentRDDs().keys())
             _keywords(sentences, weight_comb=weight_comb)
-            assert len(sc._jsc.getPersistentRDDs()) == before
+            assert set(sc._jsc.getPersistentRDDs().keys()) <= before
 
 
 def test_local_path_job_count_independent_of_documents(spark):
